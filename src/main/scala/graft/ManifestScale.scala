@@ -49,8 +49,9 @@ object ManifestScale {
     }
     assert(added.size == n / 100 + 1000 && removed.size == n / 100)
     // per-file skipping sidecar at this file count: the write, the
-    // read-back, and the driver-side pruning decision (envelope filter
-    // + file-list collect — exactly readPrunedAll's core)
+    // read-back, and an envelope filter + file-list collect over it
+    // (the per-file range test Manifest.admittedFilesFor makes at the
+    // driver, run here as a Spark filter)
     val stats = spark.range(n).select(
       F.concat(F.lit(s"$tbl/_v00000001-aa000000/part-"),
         F.lpad(F.col("id").cast("string"), 7, "0"),

@@ -42,10 +42,10 @@ object Compiler {
     // ---- manifest fact binding: time travel + driver file skipping --
     // ONE rebind before source selection. asOf pins the scan to a
     // snapshot (rollup alt-sources materialize CURRENT data, so they
-    // are disabled for a pinned epoch); independently, any numeric
-    // bounds / string bounds (incl. day-BETWEEN ranges) recoverable from the WHERE's
-    // conjuncts prune the fact's FILES at the driver through the
-    // ANALYZE sidecars (readPrunedMixed) — pruning only ever drops
+    // are disabled for a pinned epoch); independently, the WHERE's
+    // predicate tree (ranges incl. day-BETWEEN strings, OR, IN)
+    // prunes the fact's FILES at the driver through the ANALYZE
+    // sidecars (readPrunedWhereOpt) — pruning only ever drops
     // files whose envelope cannot match, and the WHERE still applies
     // in full, so the rebind is invisible except in files opened.
     // manifestTable's contract makes this sound: fact ≡

@@ -1402,10 +1402,10 @@ object Manifest {
     *
     * Phase 1 finds the touched files EXACTLY — a scan of the predicate
     * columns only (columnar projection + parquet row-group pushdown)
-    * grouped by `input_file_name()`; range/equality bounds DERIVED
-    * FROM THE PREDICATE ([[boundsFromPred]] — sound by construction)
-    * first prune the scan to the envelope-intersecting files when an
-    * [[analyzeFiles]] sidecar exists, so at 100 TB a clustered
+    * grouped by `input_file_name()`; the predicate's own per-file
+    * envelope admission ([[admittedFilesFor]] — sound by construction)
+    * first prunes the scan to the files that may hold a match when an
+    * envelope sidecar exists, so at 100 TB a clustered
     * takedown touches a handful of files and phase 1 reads little
     * more. Phase 2 rewrites the touched files' survivors into the new
     * version directory; untouched entries are CARRIED: whole
@@ -1424,100 +1424,40 @@ object Manifest {
     * refused (a snapshot cannot be empty) — takedowns are selective
     * by nature; drop the table instead. */
   def deleteWhere(spark: SparkSession, table: String, pred: Column): Snapshot =
-    deleteCore(spark, table, pred,
-      scanFor = (snap, rawFull) => {
-        // envelope pruning is derived from the PREDICATE ITSELF, so it
-        // cannot be unsound ([[admittedFilesFor]] — per-leaf envelope
-        // tests, OR/IN prune to per-disjunct unions, anything
-        // unrecognized scans fully). (An earlier design took
-        // caller-supplied ranges on trust — a hint narrower than the
-        // predicate would have silently left matching rows alive in
-        // pruned files, in the takedown path of all places.)
-        admittedFilesFor(spark, table, snap,
-          predToPhysical(snap, pred)) match {
-          case None => rawFull
-          case Some(fl) if fl.isEmpty => rawFull.limit(0)
-          case Some(fl) => snapshotReader(spark, snap).parquet(fl: _*)
-        }
-      })
+    // envelope pruning is derived from the PREDICATE ITSELF, so it
+    // cannot be unsound ([[admittedFilesFor]] — per-leaf envelope
+    // tests, OR/IN prune to per-disjunct unions, anything
+    // unrecognized scans fully). (An earlier design took
+    // caller-supplied ranges on trust — a hint narrower than the
+    // predicate would have silently left matching rows alive in
+    // pruned files, in the takedown path of all places.)
+    deleteCore(spark, table, pred, candidates = snap =>
+      admittedFilesFor(spark, table, snap, predToPhysical(snap, pred)))
 
-  /** Per-column [lo, hi] bounds IMPLIED by a predicate — sound for
-    * file pruning: a file whose envelope misses the bounds cannot hold
-    * a matching row. Conjunctions intersect; bare numeric
-    * comparisons/equality/between bound one side; any other shape
-    * (OR, UDFs, strings, IN) contributes nothing — the caller of the
-    * pruned scan then reads everything, conservatively. */
-  private[graft] def boundsFromPred(pred: Column): Seq[(String, Double, Double)] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def num(l: Any): Option[Double] = l match {
-      case n: Number => Some(n.doubleValue())
-      case d: java.math.BigDecimal => Some(d.doubleValue())
-      case d: scala.math.BigDecimal => Some(d.toDouble)
-      case _ => None
-    }
-    def attr(e: Expression): Option[String] = e match {
-      // deliberately NO Cast unwrapping: a narrowing cast can wrap
-      // values, so a bound on cast(col) does not bound col
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def lower(a: Expression, v: Any) = (attr(a), num(v)) match {
-      case (Some(c), Some(x)) => Seq((c, x, Double.PositiveInfinity))
-      case _ => Nil
-    }
-    def upper(a: Expression, v: Any) = (attr(a), num(v)) match {
-      case (Some(c), Some(x)) => Seq((c, Double.NegativeInfinity, x))
-      case _ => Nil
-    }
-    def point(a: Expression, v: Any) = (attr(a), num(v)) match {
-      case (Some(c), Some(x)) => Seq((c, x, x))
-      case _ => Nil
-    }
-    def walk(e: Expression): Seq[(String, Double, Double)] = e match {
-      case And(l, r) => walk(l) ++ walk(r)
-      case GreaterThan(a, Literal(v, _)) => lower(a, v)
-      case GreaterThan(Literal(v, _), a) => upper(a, v)
-      case GreaterThanOrEqual(a, Literal(v, _)) => lower(a, v)
-      case GreaterThanOrEqual(Literal(v, _), a) => upper(a, v)
-      case LessThan(a, Literal(v, _)) => upper(a, v)
-      case LessThan(Literal(v, _), a) => lower(a, v)
-      case LessThanOrEqual(a, Literal(v, _)) => upper(a, v)
-      case LessThanOrEqual(Literal(v, _), a) => lower(a, v)
-      case EqualTo(a, Literal(v, _)) => point(a, v)
-      case EqualTo(Literal(v, _), a) => point(a, v)
-      // a Column-built predicate converts to UNRESOLVED function calls
-      // (the analyzer is what turns `>=` into GreaterThanOrEqual); the
-      // driver decision must read them by name
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if u.nameParts.lengthCompare(1) == 0 =>
-        (u.nameParts.head.toLowerCase, u.arguments) match {
-          case ("and", Seq(l, r)) => walk(l) ++ walk(r)
-          case (">", Seq(a, Literal(v, _))) => lower(a, v)
-          case (">", Seq(Literal(v, _), a)) => upper(a, v)
-          case (">=", Seq(a, Literal(v, _))) => lower(a, v)
-          case (">=", Seq(Literal(v, _), a)) => upper(a, v)
-          case ("<", Seq(a, Literal(v, _))) => upper(a, v)
-          case ("<", Seq(Literal(v, _), a)) => lower(a, v)
-          case ("<=", Seq(a, Literal(v, _))) => upper(a, v)
-          case ("<=", Seq(Literal(v, _), a)) => lower(a, v)
-          case ("=" | "==", Seq(a, Literal(v, _))) => point(a, v)
-          case ("=" | "==", Seq(Literal(v, _), a)) => point(a, v)
-          case _ => Nil
-        }
-      case _ => Nil
-    }
-    // intersect multiple bounds on the same column
-    walk(GraftBridge.convertedExpression(pred))
-      .groupBy(_._1).toSeq.map { case (c, bs) =>
-        (c, bs.map(_._2).max, bs.map(_._3).min)
-      }.filter { case (_, lo, hi) => lo <= hi }.sortBy(_._1)
+  /** The bare column name an envelope test may bound — deliberately
+    * NO Cast unwrapping: a narrowing cast can wrap values, so a bound
+    * on cast(col) does not bound col. Shared by every predicate walker
+    * that decides from sidecar envelopes. */
+  private def attrName(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Option[String] = e match {
+    case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+      Some(a.name)
+    case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
+      Some(a.name)
+    case _ => None
   }
 
-  /** [[boundsFromPred]] with a COMPLETENESS proof: Some(bounds) only
-    * when the predicate is EXACTLY the conjunction of the returned
-    * inclusive ranges — every leaf is a recognized non-strict
+  /** A numeric literal's value as a double — the envelopes' type
+    * (`java.math.BigDecimal` and `scala.math.BigDecimal` are both
+    * `Number`s). */
+  private def numLit(v: Any): Option[Double] = v match {
+    case n: Number => Some(n.doubleValue())
+    case _ => None
+  }
+
+  /** Per-column inclusive [lo, hi] ranges with a COMPLETENESS proof:
+    * Some(bounds) only when the predicate is EXACTLY the conjunction of
+    * the returned inclusive ranges — every leaf is a recognized non-strict
     * comparison (>=, <=, =, BETWEEN) of a bare attribute against a
     * numeric literal, and nothing else appears in the tree. Strict
     * comparisons are rejected on purpose: pruning may relax `>` to
@@ -1526,33 +1466,20 @@ object Manifest {
     * per-file stats alone for files fully inside every range (and
     * with no NULLs in the predicate columns), scanning only the
     * boundary — [[statsAggregateWhere]]. Contradictory bounds are
-    * KEPT (lo > hi ⇒ the predicate is unsatisfiable ⇒ zero rows),
-    * unlike the pruning variant which drops them. */
+    * KEPT (lo > hi ⇒ the predicate is unsatisfiable ⇒ zero rows). */
   private[graft] def boundsFromPredComplete(pred: Column)
       : Option[Seq[(String, Double, Double)]] = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def num(l: Any): Option[Double] = l match {
-      case n: Number => Some(n.doubleValue())
-      case d: java.math.BigDecimal => Some(d.doubleValue())
-      case d: scala.math.BigDecimal => Some(d.toDouble)
-      case _ => None
-    }
-    def attr(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
     type B = (String, Double, Double)
     def mk(a: Expression, v: Any, lo: Boolean): Option[Seq[B]] =
-      (attr(a), num(v)) match {
+      (attrName(a), numLit(v)) match {
         case (Some(c), Some(x)) => Some(Seq(
           if (lo) (c, x, Double.PositiveInfinity)
           else (c, Double.NegativeInfinity, x)))
         case _ => None
       }
     def pt(a: Expression, v: Any): Option[Seq[B]] =
-      (attr(a), num(v)) match {
+      (attrName(a), numLit(v)) match {
         case (Some(c), Some(x)) => Some(Seq((c, x, x)))
         case _ => None
       }
@@ -1608,7 +1535,7 @@ object Manifest {
       version: Option[Long] = None): DataFrame = {
     require(where.nonEmpty,
       "statsAggregateWhere needs at least one range (else statsAggregate)")
-    val snap = resolveStatsSnap(spark, table, version, "statsAggregateWhere")
+    val snap = resolveSnapshot(spark, table, version, "statsAggregateWhere")
     val predCol = where.map { case (c, lo, hi) =>
       F.col(c) >= lo && F.col(c) <= hi }.reduce(_ && _)
     val allFiles = listSnapshotFiles(spark, table, snap)
@@ -1717,7 +1644,7 @@ object Manifest {
     import org.apache.spark.sql.types.StringType
     require(groupBy.nonEmpty,
       "statsAggregateGrouped needs group keys (else statsAggregate)")
-    val snap = resolveStatsSnap(spark, table, version, "statsAggregateGrouped")
+    val snap = resolveSnapshot(spark, table, version, "statsAggregateGrouped")
     // schema WITHOUT a full relation init (the statsAggregate lesson):
     // the committed-schema stamp when present, else one footer; hive
     // layouts keep the relation read (a leaf footer lacks the
@@ -2024,75 +1951,6 @@ object Manifest {
     df.select(outCols: _*)
   }
 
-  /** STRING bounds recoverable from a predicate's top-level conjuncts
-    * — `source = 'x'`, `day BETWEEN '2024-01-01' AND '2024-01-07'`,
-    * `url >= 'https://a/'` — as optional-sided inclusive ranges for
-    * [[readPrunedMixed]]'s string family. Strict comparisons relax to
-    * inclusive (the admitted file set only ever grows — sound); the
-    * same conservative discipline as [[boundsFromPred]]: only bare
-    * attributes, only literal strings, OR subtrees contribute
-    * nothing. Multiple conjuncts on one column intersect in UTF-8
-    * byte order (the order the envelopes were computed in). */
-  private[graft] def strBoundsFromPred(pred: Column)
-      : Seq[(String, Option[String], Option[String])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.types.StringType
-    def attr(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    type B = (String, Option[String], Option[String])
-    def mk(a: Expression, v: Any, lo: Boolean, hi: Boolean): Seq[B] =
-      (attr(a), Option(v)) match {
-        case (Some(c), Some(s)) =>
-          val t = s.toString
-          Seq((c, if (lo) Some(t) else None, if (hi) Some(t) else None))
-        case _ => Nil
-      }
-    def walk(e: Expression): Seq[B] = e match {
-      case And(l, r) => walk(l) ++ walk(r)
-      case EqualTo(a, Literal(v, StringType)) => mk(a, v, lo = true, hi = true)
-      case EqualTo(Literal(v, StringType), a) => mk(a, v, lo = true, hi = true)
-      case GreaterThan(a, Literal(v, StringType)) => mk(a, v, true, false)
-      case GreaterThanOrEqual(a, Literal(v, StringType)) => mk(a, v, true, false)
-      case LessThan(a, Literal(v, StringType)) => mk(a, v, false, true)
-      case LessThanOrEqual(a, Literal(v, StringType)) => mk(a, v, false, true)
-      case GreaterThan(Literal(v, StringType), a) => mk(a, v, false, true)
-      case GreaterThanOrEqual(Literal(v, StringType), a) => mk(a, v, false, true)
-      case LessThan(Literal(v, StringType), a) => mk(a, v, true, false)
-      case LessThanOrEqual(Literal(v, StringType), a) => mk(a, v, true, false)
-      // Column-built predicates convert to unresolved calls by name
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if u.nameParts.lengthCompare(1) == 0 =>
-        (u.nameParts.head.toLowerCase, u.arguments) match {
-          case ("and", Seq(l, r)) => walk(l) ++ walk(r)
-          case ("=" | "==", Seq(a, Literal(v, StringType))) =>
-            mk(a, v, lo = true, hi = true)
-          case ("=" | "==", Seq(Literal(v, StringType), a)) =>
-            mk(a, v, lo = true, hi = true)
-          case (">" | ">=", Seq(a, Literal(v, StringType))) => mk(a, v, true, false)
-          case (">" | ">=", Seq(Literal(v, StringType), a)) => mk(a, v, false, true)
-          case ("<" | "<=", Seq(a, Literal(v, StringType))) => mk(a, v, false, true)
-          case ("<" | "<=", Seq(Literal(v, StringType), a)) => mk(a, v, true, false)
-          case _ => Nil
-        }
-      case _ => Nil
-    }
-    // intersect per column: max of lows, min of highs, UTF-8 order
-    walk(GraftBridge.convertedExpression(pred))
-      .groupBy(_._1).toSeq.map { case (c, bs) =>
-        val los = bs.flatMap(_._2)
-        val his = bs.flatMap(_._3)
-        (c,
-          if (los.isEmpty) None else Some(los.reduce((a, b) =>
-            if (utf8Cmp(a, b) >= 0) a else b)),
-          if (his.isEmpty) None else Some(his.reduce((a, b) =>
-            if (utf8Cmp(a, b) <= 0) a else b)))
-      }.sortBy(_._1)
-  }
-
   /** POINT takedown: delete the rows whose `column` is one of
     * `values` — the literal right-to-be-forgotten shape ("remove
     * these 37 opted-out ids"). Phase 1's candidate files come from
@@ -2107,13 +1965,8 @@ object Manifest {
       values: Seq[Any]): Snapshot = {
     require(values.nonEmpty, "Manifest.deleteKeys: no values to delete")
     deleteCore(spark, table, F.col(column).isin(values: _*),
-      scanFor = (snap, rawFull) =>
-        pointCandidateFiles(spark, table, snap,
-          physOf(snap)(column), values) match {
-          case None => rawFull
-          case Some(fl) if fl.isEmpty => rawFull.limit(0)
-          case Some(fl) => snapshotReader(spark, snap).parquet(fl: _*)
-        })
+      candidates = snap => pointCandidateFiles(spark, table, snap,
+        physOf(snap)(column), values))
   }
 
   /** [[deleteKeys]] for COMPOSITE keys: delete the rows whose key
@@ -2141,17 +1994,25 @@ object Manifest {
         .map { case (c, v) => F.col(c) === F.lit(v) }.reduce(_ && _))
       .reduce(_ || _)
     deleteCore(spark, table, pred,
-      scanFor = (snap, rawFull) =>
-        pointCandidateFilesTuples(spark, table, snap,
-          columns.map(physOf(snap)), rows) match {
-          case None => rawFull
-          case Some(fl) if fl.isEmpty => rawFull.limit(0)
-          case Some(fl) => snapshotReader(spark, snap).parquet(fl: _*)
-        })
+      candidates = snap => pointCandidateFilesTuples(spark, table, snap,
+        columns.map(physOf(snap)), rows))
   }
 
+  /** A phase-1 scan of the RAW snapshot `raw` restricted to a skipping
+    * decision's candidate files (None ⇒ every file) — raw, because
+    * `input_file_name()` cannot ride the DV anti-join's plan. */
+  private def scanCandidates(spark: SparkSession, snap: Snapshot,
+      raw: DataFrame, files: Option[Seq[String]]): DataFrame = files match {
+    case None => raw
+    case Some(fl) if fl.isEmpty => raw.limit(0)
+    case Some(fl) => snapshotReader(spark, snap).parquet(fl: _*)
+  }
+
+  /** The shared CoW takedown. `candidates` is the caller's file-skipping
+    * decision for the pinned snapshot — Some(files that may hold a
+    * match) or None ⇒ phase 1 scans every file. */
   private def deleteCore(spark: SparkSession, table: String, pred0: Column,
-      scanFor: (Snapshot, DataFrame) => DataFrame): Snapshot = {
+      candidates: Snapshot => Option[Seq[String]]): Snapshot = {
     val snap = currentSnapshot(spark, table).getOrElse(
       sys.error(s"Manifest.deleteWhere: $table has no committed snapshot"))
     // the caller's predicate speaks LOGICAL names; everything below
@@ -2166,7 +2027,7 @@ object Manifest {
     // matching the predicate marks its file touched — a harmless
     // over-approximation; the rewrite reads the file LIVE, so the
     // mask still holds and the vector folds for free
-    val scanned = scanFor(snap, raw)
+    val scanned = scanCandidates(spark, snap, raw, candidates(snap))
     def norm(f: String) = new Path(f).toUri.getPath
     val touched = scanned.filter(pred)
       .select(F.input_file_name().as("f")).distinct()
@@ -2262,9 +2123,10 @@ object Manifest {
     * grouped by `input_file_name()`. On a single-column key with a
     * Bloom sidecar ([[analyzeFilesBloom]]) and a driver-feasible key
     * set, the scan is first restricted to the sidecar's candidate
-    * files ([[pointCandidates]] — false negatives impossible, so the
-    * restriction is sound); at 100 TB a thousand-row upsert opens a
-    * handful of files, decided at the driver. Phase 2 rewrites the
+    * files ([[pointCandidateFilesHashed]] — false negatives
+    * impossible, so the restriction is sound); at 100 TB a
+    * thousand-row upsert opens a handful of files, decided at the
+    * driver. Phase 2 rewrites the
     * touched files' unmatched survivors; untouched entries carry
     * whole when clean, per-file when their directory is partially
     * touched (the [[deleteWhere]] file-grain CoW). Hive-partitioned
@@ -2352,12 +2214,8 @@ object Manifest {
       if (parts.isEmpty) {
         val bloomName = compositeName(keysP)
         val hs = keyProbe.map(_.getLong(0)).toIndexedSeq
-        if (hs.size <= probeCap)
-          pointCandidateFilesHashed(spark, table, snap, bloomName, hs) match {
-            case None => raw
-            case Some(fl) if fl.isEmpty => raw.limit(0)
-            case Some(fl) => snapshotReader(spark, snap).parquet(fl: _*)
-          }
+        if (hs.size <= probeCap) scanCandidates(spark, snap, raw,
+          pointCandidateFilesHashed(spark, table, snap, bloomName, hs))
         else raw
       } else raw
     def norm(f: String) = new Path(f).toUri.getPath
@@ -2426,11 +2284,11 @@ object Manifest {
     * tables pay nothing.
     *
     * Phase 1 prunes the positional scan with the same
-    * predicate-derived envelope bounds as [[deleteWhere]]
-    * ([[boundsFromPred]] + [[prunedFilesFor]] — sound by
-    * construction). Positions already masked by earlier DVs are
-    * excluded, so repeated MoR deletes never grow the vector with
-    * duplicates. A no-match delete commits nothing.
+    * predicate-derived envelope admission as [[deleteWhere]]
+    * ([[admittedFilesFor]] — sound by construction). Positions
+    * already masked by earlier DVs are excluded, so repeated MoR
+    * deletes never grow the vector with duplicates. A no-match delete
+    * commits nothing.
     *
     * The debt is repaid by [[foldDeletes]] (rewrite ONLY the masked
     * files, clear the vectors) or any full rewrite ([[compact]]).
@@ -3245,10 +3103,10 @@ object Manifest {
     * snapshot, as a sidecar parquet under `_manifest/` (invisible to
     * data readers; version-scoped, so immutable-file semantics carry
     * over). Numeric columns record a double envelope (exact below
-    * 2⁵³); others are skipped (string pruning can be added the same
-    * way — the [[Stats.analyzeSketch]] type-split). The sidecar is an
-    * OPTIONAL accelerator: [[readPruned]] falls back to the full file
-    * list for versions without one, and files the stats frame does
+    * 2⁵³); others are skipped ([[analyzeFilesString]] is the string
+    * type-split). The sidecar is an OPTIONAL accelerator: the
+    * file-skipping decision ([[admittedFilesFor]]) reads every file
+    * when no retained sidecar exists, and files the stats frame does
     * not mention are always read.
     *
     * INCREMENTAL: data files are immutable, so any retained prior
@@ -3459,11 +3317,12 @@ object Manifest {
 
   /** Point-lookup read: the current snapshot restricted to the files
     * whose Bloom sidecar says MIGHT contain `value` in `column` — the
-    * [[readPruned]] decision shape (driver-side, sidecar only,
-    * uncovered files conservatively read, no sidecar or a partitioned
-    * snapshot = plain read). The probe hashes through a 1-row Spark
-    * query with the value cast to the column's own type, so the bits
-    * agree with the aggregate's xxhash64 exactly. */
+    * envelope decision's shape (driver-side, sidecar only, uncovered
+    * files conservatively read, no sidecar or a partitioned snapshot =
+    * plain read). The probe value is cast to the column's own type —
+    * under the session time zone, as the row filter casts it — and
+    * hashed at the driver, so the bits agree with the aggregate's
+    * xxhash64 exactly. */
   def readPoint(spark: SparkSession, table: String,
       column: String, value: Any): DataFrame =
     readPointAny(spark, table, column, Seq(value))
@@ -3477,11 +3336,9 @@ object Manifest {
   def readPointAny(spark: SparkSession, table: String, column: String,
       values: Seq[Any]): DataFrame = {
     require(values.nonEmpty, "Manifest.readPointAny: no probe values")
-    val snap = currentSnapshot(spark, table).getOrElse(
-      sys.error(s"Manifest.readPointAny: $table has no committed snapshot"))
-    pointCandidates(spark, table, snap, physOf(snap)(column), values)
-      .map(toLogicalProj(snap, _))
-      .getOrElse(readSnapshotData(spark, table, snap))
+    val snap = resolveSnapshot(spark, table, None, "readPointAny")
+    serveFiles(spark, table, snap,
+      pointCandidateFiles(spark, table, snap, physOf(snap)(column), values))
   }
 
   /** [[readPointAny]] for COMPOSITE keys: the current snapshot
@@ -3496,41 +3353,23 @@ object Manifest {
       "Manifest.readPointTuples: use readPointAny for a single column")
     require(rows.nonEmpty && rows.forall(_.size == columns.size),
       "Manifest.readPointTuples: every tuple must match the columns")
-    val snap = currentSnapshot(spark, table).getOrElse(
-      sys.error(s"Manifest.readPointTuples: $table has no committed snapshot"))
-    pointCandidateFilesTuples(spark, table, snap,
-      columns.map(physOf(snap)), rows) match {
-      case None => readSnapshotData(spark, table, snap)
-      case Some(paths) if paths.isEmpty =>
-        toLogicalProj(snap, readSnapshotRaw(spark, table, snap).limit(0))
-      case Some(paths) =>
-        toLogicalProj(snap, readFilesLive(spark, table, snap, paths))
-    }
+    val snap = resolveSnapshot(spark, table, None, "readPointTuples")
+    serveFiles(spark, table, snap, pointCandidateFilesTuples(spark, table,
+      snap, columns.map(physOf(snap)), rows))
   }
-
-  /** The bloom-sidecar pruning decision shared by [[readPointAny]]
-    * and [[deleteKeys]]: Some(pruned frame) when a sidecar covers the
-    * column on an unpartitioned layout, None ⇒ caller serves the full
-    * read. The pruned subset reads under the snapshot's committed
-    * schema like every other partial read. */
-  private def pointCandidates(spark: SparkSession, table: String,
-      snap: Snapshot, column: String,
-      values: Seq[Any]): Option[DataFrame] =
-    pointCandidateFiles(spark, table, snap, column, values).map { paths =>
-      if (paths.isEmpty) readSnapshotRaw(spark, table, snap).limit(0)
-      else readFilesLive(spark, table, snap, paths)
-    }
 
   /** The bloom-sidecar DECISION alone — Some(candidate absolute file
     * paths, sidecar-unknown files conservatively included) or None ⇒
-    * no pruning applies. Separated from the live read so phase-1
-    * scans that need `input_file_name()` (unsupported over the DV
-    * anti-join's multi-source plan) can read the candidates RAW. */
+    * no pruning applies. Shared by [[readPointAny]] (served live) and
+    * [[deleteKeys]], whose phase-1 scan needs `input_file_name()`
+    * (unsupported over the DV anti-join's multi-source plan) and so
+    * reads the candidates RAW. */
   private def pointCandidateFiles(spark: SparkSession, table: String,
       snap: Snapshot, column: String,
       values: Seq[Any]): Option[Seq[String]] = {
     val dt = readSnapshotRaw(spark, table, snap).schema(column).dataType
-    val probes = values.map(v => driverHash(Seq(v -> dt)))
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val probes = values.map(v => driverHash(Seq(v -> dt), tz))
     pointCandidateFilesHashed(spark, table, snap, column, probes)
   }
 
@@ -3542,7 +3381,8 @@ object Manifest {
       rows: Seq[Seq[Any]]): Option[Seq[String]] = {
     val sch = readSnapshotRaw(spark, table, snap).schema
     val dts = keys.map(k => sch(k).dataType)
-    val probes = rows.map(r => driverHash(r.zip(dts)))
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val probes = rows.map(r => driverHash(r.zip(dts), tz))
     pointCandidateFilesHashed(spark, table, snap,
       compositeName(keys), probes)
   }
@@ -3551,11 +3391,15 @@ object Manifest {
     * exact expression `F.xxhash64(F.lit(v).cast(dt))` the sidecar
     * build hashes with, but eval'd directly instead of launching a
     * 1-row Spark job per probe batch (the job was pure scheduling
-    * latency: constant inputs, constant output). */
-  private def driverHash(vals: Seq[(Any, org.apache.spark.sql.types.DataType)]): Long = {
+    * latency: constant inputs, constant output). `tz` is the session
+    * time zone: a string probe on a timestamp column must name the
+    * same instant the takedown's row filter casts it to, or the file
+    * holding the row is excluded. */
+  private def driverHash(vals: Seq[(Any, org.apache.spark.sql.types.DataType)],
+      tz: String): Long = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
     val children = vals.map { case (v, dt) =>
-      Cast(Literal.create(v), dt, Some("UTC")) }
+      Cast(Literal.create(v), dt, Some(tz)) }
     XxHash64(children, 42L).eval(null).asInstanceOf[Long]
   }
 
@@ -3614,64 +3458,37 @@ object Manifest {
   def readPrunedAll(spark: SparkSession, table: String,
       ranges: Seq[(String, Double, Double)]): DataFrame = {
     require(ranges.nonEmpty, "readPrunedAll needs at least one range")
-    val snap = currentSnapshot(spark, table).getOrElse(
-      sys.error(s"Manifest.readPruned: $table has no committed snapshot"))
-    prunedFilesFor(spark, table, snap,
-      ranges.map(r => (physOf(snap)(r._1), r._2, r._3))) match {
-      case None => readSnapshotData(spark, table, snap)
-      case Some(paths) if paths.isEmpty =>
-        toLogicalProj(snap, readSnapshotRaw(spark, table, snap).limit(0))
-      case Some(paths) =>
-        toLogicalProj(snap, readFilesLive(spark, table, snap, paths))
-    }
+    readWhere(spark, table, resolveSnapshot(spark, table, None, "readPruned"),
+      ranges.map(numRange).reduce(_ && _))
   }
 
-  /** The envelope-sidecar file-skipping DECISION, separated from the
-    * read so positional scans ([[deleteWhereMoR]]) can reuse it:
-    * Some(absolute file paths surviving every range's envelope test),
-    * or None when pruning cannot apply (no sidecar, hive layout, or a
-    * probed column the sidecar predates — the caller serves the full
-    * read, conservatively). Driver-side metadata only. */
-  private def prunedFilesFor(spark: SparkSession, table: String,
-      snap: Snapshot,
-      ranges: Seq[(String, Double, Double)]): Option[Seq[String]] = {
-    // hive-partitioned snapshots: leaf-file reads would silently drop
-    // the partition columns, and their pruning is already partition
-    // pruning's job. The file universe comes from the FILESYSTEM
-    // listing (never a relation init at decision time); sidecar rows
-    // match by normalized URI path, since input_file_name() and the
-    // listing render the scheme differently. The newest RETAINED
-    // sidecar decides (files are immutable; uncovered files read).
-    val all = listSnapshotFiles(spark, table, snap)
-    if (all.exists(f => f.split('/').exists(_.contains("="))))
-      return None
-    val (sch, rows) = newestSidecar(spark, table, snap, statsDir)
-      .getOrElse(return None)
-    // sidecar predates one of the probed columns: conservative full
-    // read, never a resolution error
-    if (!ranges.forall { case (c, _, _) =>
-        sch.fieldNames.contains(s"${c}__min") &&
-          sch.fieldNames.contains(s"${c}__max") })
-      return None
-    val fi = sch.fieldIndex("file")
-    val known = rows.map(r => normPath(r.getString(fi))).toSet
-    val keep = rows.filter { r =>
-      ranges.forall { case (c, lo, hi) =>
-        val mi = sch.fieldIndex(s"${c}__min")
-        val ma = sch.fieldIndex(s"${c}__max")
-        // mirrors the SQL semantics of !(max < lo OR min > hi): NULL
-        // stats (an all-NULL column in that file) are never kept — a
-        // range predicate cannot match a NULL row anyway
-        !r.isNullAt(mi) && !r.isNullAt(ma) &&
-          !(r.getDouble(ma) < lo || r.getDouble(mi) > hi)
-      }
-    }.map(r => normPath(r.getString(fi))).toSet
-    // every file of the pinned snapshot the sidecar does not cover
-    // stays in (stats are an accelerator, never a correctness gate)
-    Some(all.filter { f =>
-      val n = normPath(f)
-      keep.contains(n) || !known.contains(n)
-    }.toIndexedSeq)
+  /** `col ∈ [lo, hi]` as the predicate the range faces hand to
+    * [[admittedFilesFor]]. */
+  private def numRange(r: (String, Double, Double)): Column =
+    F.col(r._1) >= r._2 && F.col(r._1) <= r._3
+
+  /** A string range with only its `Some` sides, inclusive. */
+  private def strRange(r: (String, Option[String], Option[String])): Column =
+    (r._2.map(F.col(r._1) >= _) ++ r._3.map(F.col(r._1) <= _)).reduce(_ && _)
+
+  /** The range faces' serve: the pinned snapshot restricted to the
+    * files [[admittedFilesFor]] admits for a LOGICAL-named predicate —
+    * the one file-skipping decision behind every face. */
+  private def readWhere(spark: SparkSession, table: String, snap: Snapshot,
+      pred: Column): DataFrame =
+    serveFiles(spark, table, snap,
+      admittedFilesFor(spark, table, snap, predToPhysical(snap, pred)))
+
+  /** The one serve of a file-skipping decision, under logical names:
+    * None ⇒ the plain snapshot read; no file ⇒ a well-formed empty
+    * frame; otherwise the LIVE (DV-masked) read of just those files
+    * under the snapshot's committed schema. */
+  private def serveFiles(spark: SparkSession, table: String, snap: Snapshot,
+      files: Option[Seq[String]]): DataFrame = files match {
+    case None => readSnapshotData(spark, table, snap)
+    case Some(fl) if fl.isEmpty =>
+      toLogicalProj(snap, readSnapshotRaw(spark, table, snap).limit(0))
+    case Some(fl) => toLogicalProj(snap, readFilesLive(spark, table, snap, fl))
   }
 
   // ---- string envelopes: lexicographic file skipping ----------------
@@ -3757,67 +3574,22 @@ object Manifest {
       column: String, lo: Option[String], hi: Option[String]): DataFrame = {
     require(lo.nonEmpty || hi.nonEmpty,
       "readPrunedString needs at least one bound")
-    val snap = currentSnapshot(spark, table).getOrElse(
-      sys.error(s"Manifest.readPrunedString: $table has no committed snapshot"))
-    strPrunedFilesFor(spark, table, snap,
-      physOf(snap)(column), lo, hi) match {
-      case None => readSnapshotData(spark, table, snap)
-      case Some(paths) if paths.isEmpty =>
-        toLogicalProj(snap, readSnapshotRaw(spark, table, snap).limit(0))
-      case Some(paths) =>
-        toLogicalProj(snap, readFilesLive(spark, table, snap, paths))
-    }
+    readWhere(spark, table,
+      resolveSnapshot(spark, table, None, "readPrunedString"),
+      strRange((column, lo, hi)))
   }
 
   /** Prefix file skipping: live rows whose files may contain a value
     * starting with `prefix` — the `LIKE 'prefix%'` accelerator. The
     * admission range is [prefix, successor(prefix)) in UTF-8 byte
     * order, so it is SOUND for every string with that prefix (all of
-    * them are ≥ the prefix and < its successor). */
+    * them are ≥ the prefix and < its successor); with no successor
+    * the range is unbounded above. */
   def readPrefix(spark: SparkSession, table: String,
       column: String, prefix: String): DataFrame = {
-    val snap = currentSnapshot(spark, table).getOrElse(
-      sys.error(s"Manifest.readPrefix: $table has no committed snapshot"))
-    strPrunedFilesFor(spark, table, snap, physOf(snap)(column),
-      Some(prefix), prefixSuccessor(prefix), hiExclusive = true) match {
-      case None => readSnapshotData(spark, table, snap)
-      case Some(paths) if paths.isEmpty =>
-        toLogicalProj(snap, readSnapshotRaw(spark, table, snap).limit(0))
-      case Some(paths) =>
-        toLogicalProj(snap, readFilesLive(spark, table, snap, paths))
-    }
-  }
-
-  /** The string-envelope skipping decision — [[prunedFilesFor]]'s
-    * shape over the `strstats_v` sidecar with UTF-8-byte-order
-    * comparisons (hi inclusive by default; exclusive for the prefix
-    * admission range). Some(surviving absolute paths) or None when
-    * pruning cannot apply. */
-  private def strPrunedFilesFor(spark: SparkSession, table: String,
-      snap: Snapshot, column: String,
-      lo: Option[String], hi: Option[String],
-      hiExclusive: Boolean = false): Option[Seq[String]] = {
-    val all = listSnapshotFiles(spark, table, snap)
-    if (all.exists(f => f.split('/').exists(_.contains("="))))
-      return None
-    val (sch, rows) = newestSidecar(spark, table, snap, strStatsDir)
-      .getOrElse(return None)
-    if (!sch.fieldNames.contains(s"${column}__smin") ||
-        !sch.fieldNames.contains(s"${column}__smax")) return None
-    val fi = sch.fieldIndex("file")
-    val mi = sch.fieldIndex(s"${column}__smin")
-    val ma = sch.fieldIndex(s"${column}__smax")
-    val known = rows.map(r => normPath(r.getString(fi))).toSet
-    val keep = rows.filter { r =>
-      !r.isNullAt(mi) && !r.isNullAt(ma) &&
-        lo.forall(l => utf8Cmp(r.getString(ma), l) >= 0) &&
-        hi.forall(h => if (hiExclusive) utf8Cmp(r.getString(mi), h) < 0
-          else utf8Cmp(r.getString(mi), h) <= 0)
-    }.map(r => normPath(r.getString(fi))).toSet
-    Some(all.filter { f =>
-      val n = normPath(f)
-      keep.contains(n) || !known.contains(n)
-    }.toIndexedSeq)
+    val c = F.col(column)
+    readWhere(spark, table, resolveSnapshot(spark, table, None, "readPrefix"),
+      prefixSuccessor(prefix).foldLeft(c >= prefix)((p, succ) => p && c < succ))
   }
 
   /** The snapshot's data files straight from the FILESYSTEM — the
@@ -3885,10 +3657,10 @@ object Manifest {
   /** Conjunctive file skipping across BOTH envelope families in ONE
     * decision: numeric ranges against the `stats_v` sidecar, string
     * ranges (inclusive) against `strstats_v` — a file survives only
-    * if EVERY predicate's envelope admits it. Each family's decision
-    * degrades independently (missing sidecar / predated column ⇒ that
-    * family admits everything), so the combined read is always sound
-    * and at least as tight as either side alone — the
+    * if EVERY predicate's envelope admits it. Each range degrades on
+    * its own (missing sidecar / predated column ⇒ that range admits
+    * everything), so the combined read is always sound and at least
+    * as tight as any range alone — the
     * `day BETWEEN '2024-01-01' AND '2024-01-07' AND value > x` shape
     * a time-series lakehouse probes constantly. */
   def readPrunedMixed(spark: SparkSession, table: String,
@@ -3899,47 +3671,18 @@ object Manifest {
       "readPrunedMixed needs at least one range")
     require(strRanges.forall(r => r._2.nonEmpty || r._3.nonEmpty),
       "readPrunedMixed: a string range needs at least one bound")
-    val snap = version match {
-      case Some(v) =>
-        require(versions(spark, table).contains(v),
-          s"Manifest.readPrunedMixed: $table has no retained version $v")
-        readSnapshot(spark, table, v)
-      case None => currentSnapshot(spark, table).getOrElse(
-        sys.error(s"Manifest.readPrunedMixed: $table has no committed snapshot"))
-    }
-    val numD = if (numRanges.isEmpty) None
-      else prunedFilesFor(spark, table, snap,
-        numRanges.map(r => (physOf(snap)(r._1), r._2, r._3)))
-    val strD = strRanges.foldLeft(Option.empty[Set[String]]) {
-      case (acc, (c, lo, hi)) =>
-        strPrunedFilesFor(spark, table, snap, physOf(snap)(c), lo, hi) match {
-          case None => acc
-          case Some(files) => Some(acc match {
-            case None => files.toSet
-            case Some(prev) => prev intersect files.toSet
-          })
-        }
-    }
-    (numD.map(_.toSet), strD) match {
-      case (None, None) => readSnapshotData(spark, table, snap)
-      case (a, b) =>
-        val keep = (a, b) match {
-          case (Some(x), Some(y)) => (x intersect y).toSeq.sorted
-          case (Some(x), None) => x.toSeq.sorted
-          case (None, Some(y)) => y.toSeq.sorted
-          case _ => Nil // unreachable
-        }
-        if (keep.isEmpty)
-          toLogicalProj(snap, readSnapshotRaw(spark, table, snap).limit(0))
-        else toLogicalProj(snap, readFilesLive(spark, table, snap, keep))
-    }
+    readWhere(spark, table,
+      resolveSnapshot(spark, table, version, "readPrunedMixed"),
+      (numRanges.map(numRange) ++ strRanges.map(strRange)).reduce(_ && _))
   }
 
-  /** Predicate-TREE file skipping — the OR/IN generalization of the
-    * conjunctive [[readPrunedAll]]/[[readPrunedMixed]] family, which
-    * drop every OR subtree (so `day IN (d1, d3)` pruned nothing). The
-    * predicate is evaluated ABSTRACTLY per file against both sidecar
-    * envelope families (numeric `stats_v`, string `strstats_v`): each
+  /** Predicate-TREE file skipping — the ONE min/max envelope decision:
+    * SQL scans, the cube compiler, CoW/MoR deletes, the DSv2 scan and
+    * the range faces ([[readPrunedAll]], [[readPrunedString]],
+    * [[readPrefix]], [[readPrunedMixed]], which build the equivalent
+    * conjunction) all decide here. The predicate is evaluated
+    * ABSTRACTLY per file against both sidecar envelope families
+    * (numeric `stats_v`, string `strstats_v`): each
     * recognized comparison/equality/IN leaf answers "may this file
     * hold a matching row?" from the file's [min, max] envelope, And/Or
     * compose monotonically (an over-approximation of "∃ matching row"
@@ -3949,11 +3692,11 @@ object Manifest {
     * columns a sidecar predates, files a sidecar misses — admits,
     * conservatively. An OR therefore prunes to the UNION of its
     * disjuncts' file sets: sound because a file survives when ANY
-    * disjunct's envelope test admits it, each test being the same
-    * intersection soundness as the conjunctive family. For pure
-    * conjunctions the per-leaf evaluation is EQUAL to intersecting
-    * bounds first (interval intersection distributes over the leaf
-    * tests), so this strictly subsumes the range walkers.
+    * disjunct's envelope test admits it. For pure conjunctions the
+    * per-leaf evaluation is EQUAL to intersecting bounds first
+    * (interval intersection distributes over the leaf tests), and an
+    * uncovered column only makes ITS leaf admit — the other
+    * conjuncts still prune.
     *
     * Returns Some(admitted files) — the caller still applies the
     * predicate in full, envelopes prune files, never rows — or None
@@ -3964,7 +3707,7 @@ object Manifest {
       snap: Snapshot, pred: Column,
       prunable: String => Boolean = _ => true): Option[Seq[String]] = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
     import org.apache.spark.sql.types.{DataType, StringType, StructType}
     // the NEWEST retained sidecar of each family, not just the
     // snapshot's own version: data files are immutable, so any
@@ -4011,21 +3754,9 @@ object Manifest {
       envOf[Double](numSide, "__min", "__max", (r, i) => r.getDouble(i))
     val (strCols, strEnv) =
       envOf[String](strSide, "__smin", "__smax", (r, i) => r.getString(i))
-    def attr(e: Expression): Option[String] = e match {
-      // deliberately NO Cast unwrapping (boundsFromPred's reasoning)
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def numLit(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
-      case d: java.math.BigDecimal => Some(d.doubleValue())
-      case d: scala.math.BigDecimal => Some(d.toDouble)
-      case _ => None
-    }
     // ops: gt/ge/lt/le/eq, attribute on the LEFT (callers flip)
     def leaf(f: String, a: Expression, v: Any, t: DataType,
-        op: String): Boolean = attr(a) match {
+        op: String): Boolean = attrName(a) match {
       case Some(c) if prunable(c) && numCols.contains(c) &&
           numLit(v).nonEmpty =>
         numEnv.get(f).map(_(c)) match {
@@ -4039,7 +3770,11 @@ object Manifest {
             // (deleteWhere would then silently skip matching rows).
             // `max >= v > x ⇒ round(max) >= round(x)` IS sound; the
             // superset only re-admits boundary files.
-            op match {
+            // NaN sorts above every number in Spark (`NaN >= 5` holds),
+            // while every Scala comparison with NaN is false: a NaN max
+            // (any NaN row in the file) or a NaN literal admits.
+            if (ma.isNaN || x.isNaN) true
+            else op match {
               case "gt" | "ge" => ma >= x
               case "lt" | "le" => mi <= x
               case _ => mi <= x && x <= ma
@@ -4110,31 +3845,21 @@ object Manifest {
     Some(allFiles.toIndexedSeq.filter(f => admit(expr, normPath(f))))
   }
 
-  /** [[readPrunedMixed]] for a full predicate TREE ([[admittedFilesFor]]
-    * semantics — OR and IN prune to unions of per-disjunct file sets).
-    * Serves the pinned snapshot restricted to the admitted files; the
-    * caller still applies `pred` in full. Returns None when the
-    * decision admits EVERY file or cannot apply — the caller keeps its
-    * plain read (and whatever routing, e.g. rollup alt-sources, that
-    * path enables) rather than paying a rebind that prunes nothing. */
+  /** The pinned snapshot restricted to the files a full predicate
+    * TREE admits ([[admittedFilesFor]] — OR and IN prune to unions of
+    * per-disjunct file sets); the caller still applies `pred` in
+    * full. Returns None when the decision admits EVERY file or cannot
+    * apply — the caller keeps its plain read (and whatever routing,
+    * e.g. rollup alt-sources, that path enables) rather than paying a
+    * rebind that prunes nothing. */
   def readPrunedWhereOpt(spark: SparkSession, table: String, pred: Column,
       version: Option[Long] = None,
       prunable: String => Boolean = _ => true): Option[DataFrame] = {
-    val snap = version match {
-      case Some(v) =>
-        require(versions(spark, table).contains(v),
-          s"Manifest.readPrunedWhere: $table has no retained version $v")
-        readSnapshot(spark, table, v)
-      case None => currentSnapshot(spark, table).getOrElse(
-        sys.error(s"Manifest.readPrunedWhere: $table has no committed snapshot"))
-    }
-    admittedFilesFor(spark, table, snap,
-      predToPhysical(snap, pred), prunable).flatMap { keep =>
-      if (keep.isEmpty)
-        Some(toLogicalProj(snap, readSnapshotRaw(spark, table, snap).limit(0)))
-      else if (keep.size == listSnapshotFiles(spark, table, snap).size) None
-      else Some(toLogicalProj(snap, readFilesLive(spark, table, snap, keep)))
-    }
+    val snap = resolveSnapshot(spark, table, version, "readPrunedWhere")
+    admittedFilesFor(spark, table, snap, predToPhysical(snap, pred), prunable)
+      .filter(keep => keep.isEmpty ||
+        keep.size < listSnapshotFiles(spark, table, snap).size)
+      .map(keep => serveFiles(spark, table, snap, Some(keep)))
   }
 
   /** The V2-catalog serving core ([[graft.sources.v2.GraftCatalog]]):
@@ -4146,25 +3871,14 @@ object Manifest {
   private[graft] def readAdmitted(spark: SparkSession, table: String,
       version: Option[Long], pred: Option[Column])
       : (DataFrame, Seq[String]) = {
-    val snap = version match {
-      case Some(v) =>
-        require(versions(spark, table).contains(v),
-          s"Manifest.readAdmitted: $table has no retained version $v")
-        readSnapshot(spark, table, v)
-      case None => currentSnapshot(spark, table).getOrElse(
-        sys.error(s"Manifest.readAdmitted: $table has no committed snapshot"))
-    }
+    val snap = resolveSnapshot(spark, table, version, "readAdmitted")
     val all = listSnapshotFiles(spark, table, snap)
     val admitted = pred
       .flatMap(p => admittedFilesFor(spark, table, snap,
         predToPhysical(snap, p)))
       .getOrElse(all)
-    val df =
-      if (admitted.isEmpty)
-        toLogicalProj(snap, readSnapshotRaw(spark, table, snap).limit(0))
-      else if (admitted.size == all.size) readSnapshotData(spark, table, snap)
-      else toLogicalProj(snap, readFilesLive(spark, table, snap, admitted))
-    (df, admitted)
+    (serveFiles(spark, table, snap,
+      Some(admitted).filter(a => a.isEmpty || a.size < all.size)), admitted)
   }
 
   // ---- native-V2-scan planning surface (graft.sources.v2) -----------
@@ -4176,16 +3890,16 @@ object Manifest {
   // dataSchema. Everything here is driver metadata — one listing, one
   // sidecar read, one (takedown-sized) DV collect.
 
-  /** Resolve the snapshot a catalog scan pins: an explicit retained
-    * version, else current. */
+  /** Resolve the snapshot a read pins: an explicit retained version,
+    * else current. `what` names the calling verb in the errors. */
   private[graft] def resolveSnapshot(spark: SparkSession, table: String,
-      version: Option[Long]): Snapshot = version match {
+      version: Option[Long], what: String): Snapshot = version match {
     case Some(v) =>
       require(versions(spark, table).contains(v),
-        s"Manifest: $table has no retained version $v (vacuumed?)")
+        s"Manifest.$what: $table has no retained version $v (vacuumed?)")
       readSnapshot(spark, table, v)
     case None => currentSnapshot(spark, table).getOrElse(
-      sys.error(s"Manifest: $table has no committed snapshot"))
+      sys.error(s"Manifest.$what: $table has no committed snapshot"))
   }
 
   /** True when the snapshot reads as a hive layout — directory-encoded
@@ -4355,7 +4069,7 @@ object Manifest {
       cols: Seq[String], version: Option[Long] = None): DataFrame = {
     // empty cols is the count(*)-only shape: any covered column's
     // per-file cnt anchors the row count
-    val snap = resolveStatsSnap(spark, table, version, "statsAggregate")
+    val snap = resolveSnapshot(spark, table, version, "statsAggregate")
     def fallback(): DataFrame = {
       val (cnt, per) = statsScanAgg(readSnapshotData(spark, table, snap),
         cols, None)
@@ -4403,16 +4117,6 @@ object Manifest {
 
   private type StatsPer =
     Seq[(Long, Option[Double], Option[Double], Option[Double])]
-
-  private def resolveStatsSnap(spark: SparkSession, table: String,
-      version: Option[Long], what: String): Snapshot = version match {
-    case Some(v) =>
-      require(versions(spark, table).contains(v),
-        s"Manifest.$what: $table has no retained version $v")
-      readSnapshot(spark, table, v)
-    case None => currentSnapshot(spark, table).getOrElse(
-      sys.error(s"Manifest.$what: $table has no committed snapshot"))
-  }
 
   /** Sidecar choice: the probed version's own sidecar when one was
     * built, else the newest RETAINED one (the buildSidecar reuse rule)

@@ -743,7 +743,7 @@ private[v2] class GraftScanBuilder(path: String, pinned: Option[Long],
     // min/max/sum cannot be positionally corrected without reading.
     // The takedown-heavy table keeps its zero-file dashboard count.
     locally {
-      val snap = Manifest.resolveSnapshot(spark, path, pinned)
+      val snap = Manifest.resolveSnapshot(spark, path, pinned, "scan")
       if (snap.meta.contains(Manifest.DvKey)) {
         if (groupKeys.nonEmpty || handled.nonEmpty ||
             forms.exists(_ != Cnt)) return None
@@ -888,7 +888,7 @@ private[v2] class GraftScanBuilder(path: String, pinned: Option[Long],
       new GraftLocalScan(path, pinned, schema, rows)
     case None =>
       val spark = SparkSession.active
-      val snap = Manifest.resolveSnapshot(spark, path, pinned)
+      val snap = Manifest.resolveSnapshot(spark, path, pinned, "scan")
       // a COLUMN-MAPPED snapshot rides the native scan too — with
       // every internal name translated to PHYSICAL (what the files
       // carry) and the LOGICAL schema reported back to Spark: rows

@@ -57,7 +57,7 @@ private[v2] class GraftRowLevelOperation(val path: String,
   /** Pinned ONCE: the scan serves this snapshot and the commit expects
     * exactly this version — the optimistic-concurrency bracket. */
   private[v2] val snap: Manifest.Snapshot =
-    Manifest.resolveSnapshot(spark, path, None)
+    Manifest.resolveSnapshot(spark, path, None, "rowLevelOperation")
 
   /** Checked at EXECUTION, not analysis: Spark builds the row-level
     * plan for every DELETE on such tables and only later swaps

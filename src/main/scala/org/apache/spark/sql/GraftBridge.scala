@@ -34,7 +34,7 @@ object GraftBridge {
     * `count(attr)` / `min(attr)` / `max(attr)` / `sum(attr)`, possibly
     * aliased — and return its form (`cnt`/`nn`/`min`/`max`/`sum`) plus
     * the bare attribute name. Deliberately STRICT, mirroring
-    * `Manifest.boundsFromPred`: no DISTINCT, no expressions or casts
+    * `Manifest.boundsFromPredComplete`: no DISTINCT, no expressions or casts
     * over the attribute (a cast changes sum/overflow semantics), no
     * FILTER — anything unrecognized is None and the caller must run
     * the real plan. Matches at the ColumnNode layer because that is

@@ -270,6 +270,27 @@ class LakehouseSpec extends AnyFunSuite {
       .filter($"id".between(100, 150)).count() == 51)
   }
 
+  test("a NaN row keeps its file admitted: NaN sorts above every number, " +
+      "so a NaN envelope max must not prune a `>=` probe or takedown") {
+    import graft.sources.Manifest
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("manifest_nan").toString
+    val tbl = s"$dir/t"
+    // the NaN rides in the lowest-id file, whose v envelope is [1, NaN]
+    Manifest.create(spark, tbl,
+      ((0, Double.NaN) +: (1 to 400).map(i => (i, i.toDouble))).toDF("id", "v")
+        .repartitionByRange(4, col("id")).sortWithinPartitions(col("id")))
+    Manifest.analyzeFiles(spark, tbl, Seq("v"))
+    val hit = $"v" >= 500.0
+    assert(Manifest.read(spark, tbl).filter(hit).count() == 1)
+    assert(Manifest.readPruned(spark, tbl, "v", 500.0, Double.PositiveInfinity)
+      .filter(hit).count() == 1)
+    assert(Manifest.readPrunedWhereOpt(spark, tbl, hit)
+      .getOrElse(Manifest.read(spark, tbl)).filter(hit).count() == 1)
+    Manifest.deleteWhere(spark, tbl, hit)
+    assert(Manifest.read(spark, tbl).count() == 400)
+  }
+
   test("sidecar column evolution is non-destructive: a narrower re-run " +
       "unions with the covered set; unknown columns fall back, never fail") {
     import graft.sources.Manifest
@@ -287,6 +308,15 @@ class LakehouseSpec extends AnyFunSuite {
     // unresolved-column failure
     assert(Manifest.readPruned(spark, tbl, "y", 0.0, 50.0)
       .inputFiles.length == all)
+    // in a conjunction the uncovered y only makes ITS range admit: x
+    // still prunes, and the served rows are the unpruned filter's
+    val xy = Manifest.readPrunedAll(spark, tbl,
+      Seq(("x", 0.0, 50.0), ("y", 0.0, 50.0)))
+    assert(xy.inputFiles.length < all)
+    def box(df: org.apache.spark.sql.DataFrame) =
+      df.filter($"x".between(0, 50) && $"y".between(0, 50))
+        .collect().map(_.toString).sorted.toSeq
+    assert(box(xy) == box(Manifest.read(spark, tbl)) && box(xy).size == 25)
     // analyzing y alone must NOT destroy x's envelopes — the effective
     // set is the union (every file rescans for it)
     assert(Manifest.analyzeFiles(spark, tbl, Seq("y")) == all)
@@ -326,6 +356,33 @@ class LakehouseSpec extends AnyFunSuite {
     // incremental: fully covered snapshot is a no-op
     assert(Manifest.analyzeFilesBloom(spark, tbl, Seq("id"),
       expectedItemsPerFile = 1000) == 0)
+  }
+
+  test("bloom probes cast string values in the session time zone: a " +
+      "timestamp point read and takedown find their row off UTC") {
+    import graft.sources.Manifest
+    val tzKey = "spark.sql.session.timeZone"
+    val prevTz = spark.conf.get(tzKey)
+    spark.conf.set(tzKey, "America/Los_Angeles")
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("manifest_bloom_tz").toString
+      val tbl = s"$dir/t"
+      // one row a DAY: a probe hashed under UTC names an instant eight
+      // hours off, which no row holds
+      Manifest.create(spark, tbl, spark.range(0, 400).select(col("id"),
+        F.timestamp_seconds(F.lit(1704067200L) + col("id") * 86400L).as("ts"))
+        .repartition(4))
+      Manifest.analyzeFilesBloom(spark, tbl, Seq("ts"),
+        expectedItemsPerFile = 1000, fpp = 0.0001)
+      // row 123's wall-clock time in the session zone, as a user types it
+      val probe = Manifest.read(spark, tbl).filter(col("id") === 123L)
+        .select(F.date_format(col("ts"), "yyyy-MM-dd HH:mm:ss")).head().getString(0)
+      assert(Manifest.readPoint(spark, tbl, "ts", probe)
+        .filter(col("id") === 123L).count() == 1)
+      Manifest.deleteKeys(spark, tbl, "ts", Seq(probe))
+      val left = Manifest.read(spark, tbl)
+      assert(left.count() == 399 && left.filter(col("id") === 123L).count() == 0)
+    } finally spark.conf.set(tzKey, prevTz)
   }
 
   test("deleteKeys: a point takedown on a round-robin layout scans only " +
