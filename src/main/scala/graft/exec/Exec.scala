@@ -81,6 +81,9 @@ object CubeRunner {
       if (nested) Renest.nest(flat, parsed.root, cube.name) else flat
     }
     // memoized per canonical (post-hook) query — response_builder.rb:27-38.
+    // A cached entry serves its first run's data: a repeat replays the
+    // plan's materialized shuffle output, and once it can read nothing
+    // else the cache settles the entry into its rows (PlanCache).
     // EXCEPT metrics that materialize data into the plan (snapshotsData,
     // e.g. semanticSurvivors' centroids trained at compile): caching one
     // would replay a frozen index after the table changed, so those
@@ -110,14 +113,17 @@ object CubeRunner {
 
     val stats = new ExecStats
     val done = new java.util.concurrent.CountDownLatch(1)
+    // the listener is session-wide: it sees every query's callbacks, so
+    // it takes only this request's own collect (`qe eq df.queryExecution`)
     val listener = new QueryExecutionListener { // O19
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        stats.durationNs = durationNs
-        stats.physicalPlan = qe.executedPlan.toString
-        done.countDown()
-      }
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe eq df.queryExecution) {
+          stats.durationNs = durationNs
+          stats.physicalPlan = qe.executedPlan.toString
+          done.countDown()
+        }
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        done.countDown()
+        if (qe eq df.queryExecution) done.countDown()
     }
     spark.listenerManager.register(listener)
     try {

@@ -3,6 +3,12 @@ package graft.exec
 import graft.parse.QueryParser.Element
 import graft.query.CubeQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  ExchangeQueryStageExec}
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Compiled-plan memoization per canonical query — the
   * response_builder.rb:27-38 analogue: the reference synthesizes (and
@@ -16,13 +22,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parameterized plans; repeat-identical queries (dashboards, polling)
   * are the case the reference optimizes too.
   *
-  * Access-ordered LRU, bounded — cached plans hold no data, only
-  * analyzed trees, but janino classes pin metaspace, so the bound
-  * matters for a long-lived server.
+  * Entries serve their first run's data. That was always so for any
+  * plan with an exchange, JDBC sources included: a re-collected
+  * adaptive plan replays the shuffle output its first run materialized
+  * and reads no source. So a hit SETTLES its entry into the rows
+  * themselves when re-running the plan could read nothing else — the
+  * plan is an adaptive one whose final plan is fixed (it has run),
+  * every leaf of that final plan is a materialized exchange stage or a
+  * local table, and every expression in it is deterministic. The hit
+  * collects the frame once and the entry becomes a local relation of
+  * those rows; later hits collect it without a Spark job. A result of
+  * more than 10,000 rows (the row cap), a final stage that scans a
+  * source, or a nondeterministic one is served as before.
+  *
+  * Access-ordered LRU, bounded — janino classes pin metaspace, and a
+  * settled entry holds its rows, so the bound matters for a long-lived
+  * server.
   */
 final class PlanCache(maxEntries: Int = 128) {
-  private val map = new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
+  /** A cached frame; `claimed` admits one settle attempt, ever. */
+  private final class Entry(@volatile var df: DataFrame) {
+    val claimed = new AtomicBoolean(false)
+  }
+  private val map = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
       size() > maxEntries
   }
   private var _hits = 0L
@@ -32,17 +55,56 @@ final class PlanCache(maxEntries: Int = 128) {
     * of the same shape compiles ONCE and the rest block briefly then hit.
     * Serializing first-builds of different shapes is the accepted cost —
     * a build is tens of ms of Catalyst work, and the entire point of the
-    * cache is that builds are rare. */
-  def getOrCompile(key: String)(build: => DataFrame): DataFrame = synchronized {
-    val cached = map.get(key)
-    if (cached != null) { _hits += 1; cached }
-    else { _misses += 1; val df = build; map.put(key, df); df }
+    * cache is that builds are rare. A hit's settle runs outside the
+    * lock; concurrent hits of the entry meanwhile serve its frame. */
+  def getOrCompile(key: String)(build: => DataFrame): DataFrame = {
+    val (e, hit) = synchronized {
+      val cached = map.get(key)
+      if (cached != null) { _hits += 1; (cached, true) }
+      else { _misses += 1; val e = new Entry(build); map.put(key, e); (e, false) }
+    }
+    if (hit) settle(e) else e.df
+  }
+
+  /** The entry's frame, settled into its rows first when it qualifies.
+    * A settle that throws or finds more than the row cap leaves the
+    * entry as it was, and it is not tried again. */
+  private def settle(e: Entry): DataFrame = {
+    val df = e.df
+    if (!PlanCache.replaysOnlyStages(df) || !e.claimed.compareAndSet(false, true)) df
+    else try {
+      val rows = df.collect()
+      if (rows.length > PlanCache.SettleRowCap) df
+      else {
+        val local = df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
+        e.df = local
+        local
+      }
+    } catch { case NonFatal(_) => df }
   }
   def hits: Long = synchronized(_hits)
   def misses: Long = synchronized(_misses)
 }
 
 object PlanCache {
+  /** Largest result a settled entry holds, in rows. */
+  private val SettleRowCap = 10000
+
+  /** Whether collecting `df` again can only read what its first run
+    * materialized: its adaptive plan is final, every leaf of that plan
+    * is an exchange stage or a local table, and every expression in it
+    * is deterministic. */
+  private def replaysOnlyStages(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec if a.isFinalPlan =>
+        val plan = a.finalPhysicalPlan
+        plan.collectLeaves().forall {
+          case _: ExchangeQueryStageExec | _: LocalTableScanExec => true
+          case _ => false
+        } && !plan.exists(_.expressions.exists(!_.deterministic))
+      case _ => false
+    }
+
   /** Canonical cache key: session identity + database root + cube +
     * query data + response shape. Serialized with TYPE TAGS, not
     * structural toString: `Op("flag","eq",Some(25))` and

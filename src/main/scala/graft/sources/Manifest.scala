@@ -3076,7 +3076,12 @@ object Manifest {
     * own file-format reader (the [[graft.sources.ManifestStream]] /
     * native-scan reader function, invoked here instead of inside a
     * task) — no job, no scheduling round trip. Callers bound the
-    * total bytes; this is for sidecar-sized metadata only. */
+    * total bytes; this is for sidecar-sized metadata only. Each file's
+    * reader is closed before the next opens, also when the read fails,
+    * so a caller's fallback never runs beside open readers (with no
+    * task to close them, nothing else would). The vectorized reader,
+    * Spark's default for these schemas, hands back its closeable
+    * iterator; the row reader closes itself at end of input. */
   private def driverReadParquetRows(spark: SparkSession,
       files: Seq[(String, Long)],
       schema: org.apache.spark.sql.types.StructType,
@@ -3091,12 +3096,16 @@ object Manifest {
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
     val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(schema)
-    files.iterator.flatMap { case (f, len) =>
-      readFn(PartitionedFile(InternalRow.empty,
+    files.toArray.flatMap { case (f, len) =>
+      val it = readFn(PartitionedFile(InternalRow.empty,
         org.apache.spark.paths.SparkPath.fromPathString(f), 0L, len,
         Array.empty[String]))
-        .map(r => conv(r.copy()).asInstanceOf[org.apache.spark.sql.Row])
-    }.toArray
+      try it.map(r => conv(r.copy()).asInstanceOf[org.apache.spark.sql.Row]).toArray
+      finally it match {
+        case c: AutoCloseable => c.close()
+        case _ =>
+      }
+    }
   }
 
   /** Record per-FILE min/max envelopes of `cols` for the current

@@ -233,6 +233,73 @@ class ExecSpec extends AnyFunSuite {
     assert(cache.misses == 4, "evicted entry must be a miss")
   }
 
+  test("plan cache settles a repeat request into its first run's rows") {
+    val cache = new graft.exec.PlanCache()
+    val doc2 =
+      """{"fields": [{"name": "returnFlag", "alias": "flag"},
+                     {"name": "count", "alias": "cnt"}],
+          "args": {"options": {"asc": "flag"}}}"""
+    val runs = (1 to 3).map(_ => CubeRunner.execute(spark, registry,
+      Cubes.lineitemCube, doc2, cache = Some(cache)))
+    assert(runs.head.rows.nonEmpty)
+    assert(runs(2).rows.map(_.toString) == runs.head.rows.map(_.toString))
+    assert(runs(2).columns == runs.head.columns)
+    assert(runs(2).stats.physicalPlan.contains("LocalTableScan"),
+      runs(2).stats.physicalPlan)
+    assert(cache.hits == 2 && cache.misses == 1,
+      s"hits=${cache.hits} misses=${cache.misses}")
+  }
+
+  test("plan cache never settles a nondeterministic final stage, a plan " +
+      "without an exchange, a final stage that scans, a result over the row cap, " +
+      "or a settle that throws") {
+    import org.apache.spark.sql.functions.{broadcast, col, rand, udf}
+    def fixture(t: String) = spark.read.parquet(s"${registry.dir(None)}/$t.parquet")
+    val cache = new graft.exec.PlanCache()
+    val grouped = spark.range(100).groupBy((col("id") % 3).as("k")).count()
+    val frames = Map(
+      "rand" -> grouped.withColumn("r", rand()),
+      "scan" -> fixture("region").limit(3),
+      "join" -> fixture("nation").join(broadcast(fixture("region")),
+        col("n_regionkey") === col("r_regionkey")),
+      "cap" -> spark.range(0, 20000, 1, 2).repartition(3).select(
+        udf((id: Long) => { ExecSpec.capRows.incrementAndGet(); id }).apply(col("id"))),
+      "throws" -> grouped.withColumn("t",
+        udf((k: Long) => { if (ExecSpec.failUdf) sys.error("boom"); k }).apply(col("k"))))
+    frames.foreach { case (k, df) =>
+      assert(cache.getOrCompile(k)(df) eq df)
+      df.collect()
+    }
+    ExecSpec.capRows.set(0)
+    ExecSpec.failUdf = true
+    try frames.foreach { case (k, df) =>
+      (1 to 3).foreach { _ =>
+        assert(cache.getOrCompile(k)(sys.error("no rebuild")) eq df, k)
+      }
+    } finally ExecSpec.failUdf = false
+    assert(ExecSpec.capRows.get == 20000,
+      s"an over-cap entry is collected by one settle attempt, not per hit: ${ExecSpec.capRows.get}")
+    // the positive control: the same aggregate without rand settles
+    cache.getOrCompile("plain")(grouped).collect()
+    val settled = cache.getOrCompile("plain")(sys.error("no rebuild"))
+    assert(!(settled eq grouped))
+    assert(settled.queryExecution.executedPlan.isInstanceOf[
+      org.apache.spark.sql.execution.LocalTableScanExec])
+    assert(settled.collect().toSeq == grouped.collect().toSeq)
+    assert(cache.misses == 6 && cache.hits == 16)
+  }
+
+  test("O19: stats name the request's own plan while other queries run") {
+    @volatile var stop = false
+    val noise = new Thread(() => while (!stop) spark.range(1).collect())
+    noise.start()
+    try (1 to 3).foreach { _ =>
+      val r = CubeRunner.execute(spark, registry, Cubes.lineitemCube, doc)
+      assert(r.stats.physicalPlan.contains("lineitem") &&
+        !r.stats.physicalPlan.contains("Range"), r.stats.physicalPlan)
+    } finally { stop = true; noise.join() }
+  }
+
   test("plan cache keys are typed: Int vs String args, list splits, separators never alias") {
     import graft.exec.PlanCache.canon
     // the toString trap: Op("flag","eq",Some(25)) and Op("flag","eq",Some("25"))
@@ -291,4 +358,10 @@ class ExecSpec extends AnyFunSuite {
     assert(r.stats.durationNs > 0, "listener should capture duration")
     assert(r.stats.physicalPlan.nonEmpty)
   }
+}
+
+object ExecSpec {
+  /** Read inside a UDF's tasks: local-mode tasks share this JVM. */
+  @volatile var failUdf = false
+  val capRows = new java.util.concurrent.atomic.AtomicLong
 }
