@@ -78,18 +78,17 @@ object Bench {
           try {
             all(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
             true
-          } catch { case _: Throwable => false }
+          } catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] $name failed: $e")
+              false
+          }
         val dt = (System.nanoTime() - t0) / 1e9
         name -> (if (ok) dt else -1.0)
       }
-    def json(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-        .mkString("{", ",", "}")
-    def tot(rs: Seq[(String, Double)]): Double =
-      rs.map(_._2).filter(_ >= 0).sum
     val results = run(Headline)
     val lake = run(Lakehouse)
-    val line = f"""{"metric":"total","value":${tot(results)}%.3f,"unit":"sec","queries":${json(results)},"lakehouse_value":${tot(lake)}%.3f,"lakehouse_queries":${json(lake)},"sf":"$sfDir"}"""
+    val line = resultLine(results, lake, sfDir)
     println(line)
     // Round 22: the driver has never parsed the println (sbt's logger
     // prefixed it with "[info] " every round — parsed:null in BENCH_r17..21).
@@ -102,5 +101,30 @@ object Bench {
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
     spark.stop()
+    val failed = failedQueries(results ++ lake)
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** The queries of a run that threw (their time reads `-1.0`); the
+    * bench exits nonzero when there is any. */
+  private[graft] def failedQueries(rs: Seq[(String, Double)]): Seq[String] =
+    rs.collect { case (k, v) if v < 0 => k }
+
+  /** The bench's one JSON line. A failed query keeps its `-1.0` entry
+    * in its query map and stays out of the totals, so every older key
+    * reads as before; the trailing `failed` array names it, so a
+    * smaller total can no longer hide a broken query. */
+  private[graft] def resultLine(core: Seq[(String, Double)],
+      lake: Seq[(String, Double)], sfDir: String): String = {
+    def json(rs: Seq[(String, Double)]): String =
+      rs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+        .mkString("{", ",", "}")
+    def tot(rs: Seq[(String, Double)]): Double =
+      rs.map(_._2).filter(_ >= 0).sum
+    val failed = failedQueries(core ++ lake).map("\"" + _ + "\"").mkString("[", ",", "]")
+    f"""{"metric":"total","value":${tot(core)}%.3f,"unit":"sec","queries":${json(core)},"lakehouse_value":${tot(lake)}%.3f,"lakehouse_queries":${json(lake)},"sf":"$sfDir","failed":$failed}"""
   }
 }

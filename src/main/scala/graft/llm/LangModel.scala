@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.storage.StorageLevel
 
 /** Corpus-trained bigram language model for perplexity-style quality
@@ -32,17 +33,18 @@ object LangModel {
 
   /** (doc_id, p, c): one row per adjacent lowercase-whitespace token
     * pair — the same normalization as the dedup path. Documents with
-    * fewer than two tokens carry no bigram evidence and drop here. */
+    * fewer than two tokens carry no bigram evidence and drop here.
+    * The grams are `inline(arrays_zip(...))` over offset slices of the
+    * token array: no lambda, so none of it falls back to interpreted
+    * evaluation the way a `zip_with` does. */
   private def docBigrams(docs: DataFrame, id: Column, text: Column): DataFrame = {
     val toks = Dedup.tokens(F.lower(text))
+    val n = F.size(F.col("w")) - 1
     docs.select(id.as("doc_id"), toks.as("w"))
       .filter(F.size(F.col("w")) >= 2)
-      .select(F.col("doc_id"),
-        F.explode(F.zip_with(
-          F.slice(F.col("w"), F.lit(1), F.size(F.col("w")) - 1),
-          F.slice(F.col("w"), F.lit(2), F.size(F.col("w")) - 1),
-          (p, c) => F.struct(p.as("p"), c.as("c")))).as("b"))
-      .select(F.col("doc_id"), F.col("b.p").as("p"), F.col("b.c").as("c"))
+      .select(F.col("doc_id"), F.inline(F.arrays_zip(
+        F.slice(F.col("w"), F.lit(1), n).as("p"),
+        F.slice(F.col("w"), F.lit(2), n).as("c"))))
   }
 
   /** Train on a corpus: bigram counts + vocabulary size. The
@@ -146,22 +148,17 @@ object LangModel {
       unigrams: DataFrame, totals: DataFrame)
 
   /** (doc_id, a, b, c): one row per adjacent lowercase token triple.
-    * Docs with fewer than three tokens carry no trigram evidence. */
+    * Docs with fewer than three tokens carry no trigram evidence.
+    * Built like [[docBigrams]], from three offset slices. */
   private def docTrigrams(docs: DataFrame, id: Column, text: Column): DataFrame = {
     val toks = Dedup.tokens(F.lower(text))
+    val n = F.size(F.col("w")) - 2
     docs.select(id.as("doc_id"), toks.as("w"))
       .filter(F.size(F.col("w")) >= 3)
-      .select(F.col("doc_id"),
-        F.explode(F.zip_with(
-          F.slice(F.col("w"), F.lit(1), F.size(F.col("w")) - 2),
-          F.zip_with(
-            F.slice(F.col("w"), F.lit(2), F.size(F.col("w")) - 2),
-            F.slice(F.col("w"), F.lit(3), F.size(F.col("w")) - 2),
-            (b, c) => F.struct(b.as("b"), c.as("c"))),
-          (a, bc) => F.struct(a.as("a"),
-            bc.getField("b").as("b"), bc.getField("c").as("c")))).as("g"))
-      .select(F.col("doc_id"), F.col("g.a").as("a"),
-        F.col("g.b").as("b"), F.col("g.c").as("c"))
+      .select(F.col("doc_id"), F.inline(F.arrays_zip(
+        F.slice(F.col("w"), F.lit(1), n).as("a"),
+        F.slice(F.col("w"), F.lit(2), n).as("b"),
+        F.slice(F.col("w"), F.lit(3), n).as("c"))))
   }
 
   /** Train the trigram model: three hash aggregations over the SAME
@@ -353,62 +350,58 @@ object LangModel {
   }
 
   /** Self-scoring convenience: train on the corpus, score the same
-    * corpus under interpolated KN.
+    * corpus under interpolated KN. Every position gets the counts that
+    * [[kneserNeyScoreAgainst]] attaches under [[trainTrigramModel]] of
+    * the same corpus, so the two faces agree per document.
     *
-    * Two self-score-only structural savings (results bit-identical —
-    * every scored trigram is IN the model by construction, so all five
-    * count joins of the held-out path are guaranteed hits):
-    *   - the per-doc trigram lineage (tokenize + explode, the
-    *     corpus-sized pass) feeds BOTH the type counts and the scoring
-    *     side, and both hash by the SAME (a,b,c) key, so Spark's
-    *     runtime exchange reuse serves them from ONE shuffle of the
-    *     tokenized stream — deliberately NOT persisted: a corpus-sized
-    *     persist is bigger than the corpus at 100 TB and A/B-measured
-    *     a net loss (round-21 record §2);
-    *   - the count tables are joined AMONG THEMSELVES first (all
-    *     type-table-sized) into one enriched (a,b,c) table, and the
-    *     corpus-sized trigram stream joins ONCE on (a,b,c) — instead of
-    *     five corpus-side joins on five different keys. A held-out
-    *     trigram could miss the type row while its suborders match, so
-    *     only the self-score face may take this shape; here every
-    *     (a,b,c) matches and carries exactly the suborder counts the
-    *     five-join plan would have attached. */
+    * Every count comes from ONE lineage, the type table
+    * c3 = (a, b, c, cnt3), as window aggregates over its rows:
+    * ctx2 and n1p_ab over (a,b), cont_bc over (b,c), cont_b over (b),
+    * n1p_b over (b) and cont_c over (c) — both counts of distinct
+    * (b,c) pairs, read off a first-row-of-(b,c) flag — and cont_tot
+    * over the whole table. Each c3 row IS a distinct (a,b,c) type, so
+    * a row count per key is the N₁₊ count the held-out face aggregates
+    * separately. The (b)-keyed windows sit lowest, so one
+    * hash-by-b exchange also serves the (b,c) and (a,b) windows; the
+    * (c) window takes a second, and cont_tot's window runs in a single
+    * partition — over type-table rows, never corpus rows.
+    *
+    * The corpus is tokenized in three passes: the type-count
+    * aggregation, the scoring stream, and the one distinct-count pass
+    * for n_vocab (which also sees docs too short to hold a trigram).
+    * The corpus-sized trigram stream joins the enriched type table
+    * ONCE on (a,b,c) — instead of five corpus-side joins on five
+    * different keys. A held-out trigram could miss the type row while
+    * its suborders match, so only the self-score face may take this
+    * shape; here every (a,b,c) matches and carries exactly the
+    * suborder counts the five-join plan would attach. Nothing is
+    * persisted: a corpus-sized persist is bigger than the corpus at
+    * 100 TB and A/B-measured a net loss (round-21 record §2). */
   def kneserNeyScore(docs: DataFrame, id: Column, text: Column): DataFrame = {
     val tri = docTrigrams(docs, id, text)
     val c3 = tri.groupBy("a", "b", "c").agg(F.count(F.lit(1)).as("cnt3"))
-    // bigrams ride along for TrigramModel shape-completeness only — the
-    // KN score never evaluates them (lazy plan, zero execution cost)
-    val c2 = docBigrams(docs, id, text)
-      .groupBy("p", "c").agg(F.count(F.lit(1)).as("cnt2"))
-      .select(F.col("p").as("a"), F.col("c").as("b"), F.col("cnt2"))
-    val u = docs.select(F.explode(Dedup.tokens(F.lower(text))).as("w"))
-      .groupBy("w").agg(F.count(F.lit(1)).as("cnt1"))
-    val totals = u.agg(
-      F.sum("cnt1").cast("double").as("n_tokens"),
-      F.count(F.lit(1)).cast("double").as("n_vocab"))
-    val model = TrigramModel(c3, c2, u, totals)
-    // plain aggregations over c3 (not the grouping-sets shape): the
-    // held-out face batches count derivation, but here the scoring
-    // join and the type-count aggregation already share one exchange,
-    // and A/B runs measured the grouping-sets variant no faster
-    val ctx = c3.groupBy("a", "b").agg(
-      F.sum("cnt3").cast("double").as("ctx2"),
-      F.count(F.lit(1)).cast("double").as("n1p_ab"))
-    val cbc = c3.groupBy("b", "c")
-      .agg(F.count(F.lit(1)).cast("double").as("cont_bc"))
-    val cb = cbc.groupBy("b").agg(
-      F.sum("cont_bc").as("cont_b"),
-      F.count(F.lit(1)).cast("double").as("n1p_b"))
-    val cc = cbc.groupBy("c")
-      .agg(F.count(F.lit(1)).cast("double").as("cont_c"))
-    val ctot = cbc.agg(F.count(F.lit(1)).cast("double").as("cont_tot"))
-    val enriched = model.trigrams
-      .join(ctx, Seq("a", "b"), "left")
-      .join(cbc, Seq("b", "c"), "left")
-      .join(cb, Seq("b"), "left")
-      .join(cc, Seq("c"), "left")
-      .crossJoin(ctot)
-      .crossJoin(model.totals.select(F.col("n_vocab")))
+    val nVocab = docs.select(F.explode(Dedup.tokens(F.lower(text))).as("w"))
+      .agg(F.count_distinct(F.col("w")).cast("double").as("n_vocab"))
+    val byB = Window.partitionBy("b")
+    val byBC = Window.partitionBy("b", "c")
+    val byAB = Window.partitionBy("a", "b")
+    def types(w: WindowSpec) = F.count(F.lit(1)).over(w).cast("double")
+    def distinctBC(w: WindowSpec) = F.sum(F.col("__first_bc")).over(w).cast("double")
+    val enriched = c3
+      .withColumn("cont_b", types(byB))
+      .withColumn("cont_bc", types(byBC))
+      .withColumn("__first_bc",
+        (F.row_number().over(byBC.orderBy("a")) === 1).cast("int"))
+      .withColumn("n1p_b", distinctBC(byB))
+      .withColumn("ctx2", F.sum("cnt3").over(byAB).cast("double"))
+      .withColumn("n1p_ab", types(byAB))
+      .withColumn("cont_c", distinctBC(Window.partitionBy("c")))
+      // above the crossJoin, the unkeyed window stays on top: directly
+      // over the keyed windows, the optimizer would transpose it below
+      // them and run all of them in its single partition
+      .crossJoin(nVocab)
+      .withColumn("cont_tot", distinctBC(Window.partitionBy()))
+      .drop("__first_bc")
     tri.join(enriched, Seq("a", "b", "c"), "left")
       .groupBy("doc_id")
       .agg(

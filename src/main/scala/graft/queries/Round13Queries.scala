@@ -14,6 +14,21 @@ import org.apache.spark.sql.{functions => F}
 object Round13Queries {
   import org.apache.spark.sql.functions.col
 
+  /** Row cap of q195's eager collect. The 300-token budget keeps its
+    * sample to a few rows per source (55–62 on the fixture corpora), so
+    * a result past the cap means the budget no longer bounds it. */
+  private val Q195MaxRows = 10000
+
+  /** The rows of `df`, fetched with `take(cap + 1)`; throws when there
+    * are more than `cap`, instead of pulling them all to the driver. */
+  private[graft] def collectAtMost(df: org.apache.spark.sql.DataFrame,
+      cap: Int, what: String): Array[org.apache.spark.sql.Row] = {
+    val rows = df.take(cap + 1)
+    if (rows.length > cap) throw new IllegalStateException(
+      s"$what: more than $cap rows, too many to collect at the driver")
+    rows
+  }
+
   /** Deterministic plant for the widened scrub: email, IBAN, SSN, IP,
     * and an international (+code) phone, all derived from doc_id —
     * identical on the oracle side ([[augmentV2Sql]]). The NANP 3-3-4
@@ -597,6 +612,8 @@ object Round13Queries {
     // stage's already-proven mirror over the same intermediate corpora
     // — Gopher conjunction, redactAll chain, KN continuation-table
     // replay, per-source tercile cut, budget window — end to end.
+    // The builder is EAGER: it runs the pipeline and returns its rows
+    // as a local relation (see the capped collect below).
     NamedQuery("q195_curation_v4",
       (s, d) => {
         import graft.llm.{LangModel, Pii, TextAnalysis}
@@ -633,19 +650,25 @@ object Round13Queries {
           .select(col("doc_id"), col("stratum").as("source"),
             col("n_tokens"), col("cum_tokens"))
           .orderBy(col("source").asc, col("cum_tokens").asc)
-        // force the one-shot pipeline NOW and UNPERSIST the two
-        // intermediates before returning: the final sample is
+        // EAGER: building this frame runs the whole pipeline, and the
+        // frame returned is a local relation of its rows — an action on
+        // it, or its plan, no longer reaches the documents table. The
+        // builder forces the one-shot pipeline NOW so it can UNPERSIST
+        // the two intermediates before returning: releasing the blocks
+        // here keeps a long-lived session from accumulating
+        // survivor-sized cache entries — and from CacheManager silently
+        // serving canonically-equal subplans to LATER queries (the
+        // round-21 repeat-invocation artifact). The final sample is
         // budget-bounded (the 300-token budget caps rows per source at
-        // ANY corpus scale), so the collect is driver-safe, and
-        // releasing the blocks here keeps a long-lived session from
-        // accumulating survivor-sized cache entries — and from
-        // CacheManager silently serving canonically-equal subplans to
-        // LATER queries (the round-21 repeat-invocation artifact).
-        // Rows and schema are exactly the lazy plan's; nothing is
-        // memoized across invocations.
-        val rows = result.collect()
-        scored.unpersist(false)
-        scrubbed.unpersist(false)
+        // ANY corpus scale), so the collect is driver-safe, and it is
+        // capped at Q195MaxRows in case that ever stops holding. Rows
+        // and schema are exactly the lazy plan's; nothing is memoized
+        // across invocations.
+        val rows = try collectAtMost(result, Q195MaxRows, "q195_curation_v4")
+          finally {
+            scored.unpersist(false)
+            scrubbed.unpersist(false)
+          }
         s.createDataFrame(new java.util.ArrayList(
           scala.jdk.CollectionConverters.SeqHasAsJava(rows.toSeq).asJava),
           result.schema)

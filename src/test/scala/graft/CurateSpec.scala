@@ -21,6 +21,13 @@ class CurateSpec extends AnyFunSuite {
 
   import org.apache.spark.sql.functions.col
 
+  test("collectAtMost: returns up to the cap, throws past it") {
+    import graft.queries.Round13Queries.collectAtMost
+    assert(collectAtMost(spark.range(5).toDF(), 5, "five").length == 5)
+    val e = intercept[IllegalStateException](collectAtMost(spark.range(5).toDF(), 4, "five"))
+    assert(e.getMessage.contains("five: more than 4 rows"))
+  }
+
   // ---- PII ---------------------------------------------------------
 
   test("pii: planted email/phone/ip are counted and redacted; clean text untouched") {

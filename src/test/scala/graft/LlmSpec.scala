@@ -517,6 +517,43 @@ class LlmSpec extends AnyFunSuite {
     assert(out.values.forall(v => v < 0 && !v.isNaN && !v.isInfinite))
   }
 
+  test("Kneser-Ney self-score: the final plan tokenizes the corpus at most 3 times") {
+    import graft.llm.LangModel
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val df = LangModel.kneserNeyScore(Tables.documents(spark, sf), col("doc_id"), col("text"))
+    assert(df.collect().nonEmpty)
+    // walk the final adaptive plan through its query stages; a reused
+    // exchange runs nothing of its own, so it is not walked again
+    def generates(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => generates(a.finalPhysicalPlan)
+      case qs: QueryStageExec => generates(qs.plan)
+      case _: ReusedExchangeExec => 0
+      case g: GenerateExec => 1 + g.children.map(generates).sum
+      case o => o.children.map(generates).sum
+    }
+    val n = generates(df.queryExecution.executedPlan)
+    assert(n <= 3, s"$n GenerateExec nodes: the count tables re-tokenize the corpus")
+  }
+
+  test("Kneser-Ney self-score == the held-out face trained on the same corpus") {
+    import graft.llm.LangModel
+    val docs = Tables.documents(spark, sf)
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> (r.getInt(1), r.getDouble(2))).toMap
+    val self = scores(LangModel.kneserNeyScore(docs, col("doc_id"), col("text")))
+    val held = scores(LangModel.kneserNeyScoreAgainst(
+      LangModel.trainTrigramModel(docs, col("doc_id"), col("text")),
+      docs, col("doc_id"), col("text")))
+    assert(self.nonEmpty && self.keySet == held.keySet)
+    for ((id, (n, lp)) <- self) {
+      assert(held(id)._1 == n, s"doc $id trigram count")
+      assert(math.abs(held(id)._2 - lp) <= 1e-6 + 1e-12,
+        s"doc $id: self $lp vs held-out ${held(id)._2}")
+    }
+  }
+
   test("C4 clean: every line and page rule on a hand-built fixture") {
     import graft.llm.TextAnalysis
     import spark.implicits._
