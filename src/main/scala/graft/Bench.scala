@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Headline benchmark: one representative query per operator family, run
   * on SPARK_GRAFT_SF_DIR, timings printed as ONE JSON line. Materializes
   * via the noop sink so the full plan (including projections) executes
@@ -37,14 +35,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(cpus.toInt)
 
     // untimed warmup: JVM JIT, codegen compiler, parquet footer cache.
     // Round 21 widened it (same purpose, declared in OPTIMIZATION_r21.md):
@@ -99,7 +90,9 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_out.json"),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write bench_out.json: $e")
+    }
     spark.stop()
     val failed = failedQueries(results ++ lake)
     if (failed.nonEmpty) {

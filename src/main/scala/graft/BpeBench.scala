@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Micro-bench for the BPE trainer's batched mode: trains the same
@@ -13,12 +12,7 @@ object BpeBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val nMerges = args.lift(1).map(_.toInt).getOrElse(32)
     val batchK = args.lift(2).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(8)
     val docs = graft.cubes.Tables.documents(spark, sfDir).select(col("text"))
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f

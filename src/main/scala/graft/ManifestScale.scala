@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 
 /** Driver-side manifest-metadata cost at large file counts — the
@@ -16,11 +15,7 @@ import org.apache.spark.sql.{functions => F}
 object ManifestScale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(8)
     import graft.sources.Manifest
     val dir = java.nio.file.Files.createTempDirectory("graft_mscale").toString
     val tbl = s"$dir/t"

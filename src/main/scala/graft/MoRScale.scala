@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 
 /** Round-15 write-path operators at a MANY-FILES snapshot — the
@@ -19,12 +18,7 @@ object MoRScale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(20000)
     val rowsPerFile = 50
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session(8)
     spark.sparkContext.setLogLevel("ERROR")
     import graft.sources.Manifest
     import spark.implicits._

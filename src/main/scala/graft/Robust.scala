@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Robustness sweep: run every registry query at the given SF via noop
   * sink, print per-query seconds. `sbt "runMain graft.Robust <dir> [nameFilter]"`
   * — the optional second arg restricts to queries whose name contains it
@@ -8,11 +7,7 @@ object Robust {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val filters = args.drop(1).headOption.map(_.split(",").toSeq).getOrElse(Nil)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.session(32)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) =>
@@ -23,7 +18,7 @@ object Robust {
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         println(f"ROBUST $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
       } catch { case e: Throwable =>
-        println(s"ROBUST $name FAILED: ${e.getMessage.take(120)}")
+        println(s"ROBUST $name FAILED: ${Option(e.getMessage).getOrElse("").take(120)}")
       }
     }
     spark.stop()

@@ -79,11 +79,7 @@ object Scale {
     val filters = args.headOption.filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(Nil)
     val repeats = args.drop(1).headOption.map(_.toInt).getOrElse(2)
     val big = args.drop(2).headOption.contains("big")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.session(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     prepareSynthDirs(spark)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 
 /** Driver-side cost of the round-17 skipping/serving decisions at a
@@ -14,12 +13,7 @@ import org.apache.spark.sql.{functions => F}
 object SkipScale {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(5000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(8)
     import graft.sources.Manifest
     val dir = java.nio.file.Files.createTempDirectory("graft_skipscale").toString
     val tbl = s"$dir/t"

@@ -1,17 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local replica of the driver's t1 smoke: run SparkEntry.entry, print
   * schema + rows. `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(8)
     val df = SparkEntry.entry(spark)
     df.printSchema()
     df.show(25, truncate = false)

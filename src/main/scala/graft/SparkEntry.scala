@@ -5,6 +5,21 @@ import graft.query.{CubeQuery, Pred}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
+  /** The one session factory every main and spec builds through:
+    * `local[cpus]` with as many shuffle partitions, UTC session time,
+    * no UI, WARN logging. On a JVM that already has a session,
+    * `getOrCreate` returns it and re-applies the runtime SQL settings. */
+  def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Exercises the whole engine: slices + sub-field, conditional metric,
     * predicate, sort, limit.

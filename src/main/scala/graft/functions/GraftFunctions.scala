@@ -2,18 +2,14 @@ package graft.functions
 
 import graft.model.CubeQueryException
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
 /** SQL-surface registration for the engine's custom expressions, so
   * `spark.sql("SELECT simhash64(...)")` works alongside the Column API.
   *
-  * Two entry points:
-  *  - [[GraftExtensions]] for `SparkSession.builder.withExtensions(...)`
-  *    (the SparkSessionExtensions path — survives into every session built
-  *    with it);
-  *  - [[GraftFunctions.register]] for an already-running session.
+  * One entry point: [[GraftFunctions.register]] on a running session.
+  * The native as-of planner pieces are not registered here:
+  * `AsOfJoin.dataframe`, their only producer, installs them itself.
   */
 object GraftFunctions {
 
@@ -83,29 +79,5 @@ object GraftFunctions {
         spark.sessionState.tableFunctionRegistry
           .createOrReplaceTempFunction(name, builder, "built-in")
     }
-  }
-}
-
-/** `SparkSession.builder().withExtensions(new GraftExtensions)` —
-  * functions AND the native as-of planner strategy in one shot (the
-  * deployment path; `AsOfJoin.dataframe` also self-registers the
-  * strategy on `experimental.extraStrategies` for ad-hoc sessions). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        builder))
-    }
-    graft.sources.v2.GraftTableFunctions.all.foreach {
-      case (name, builder) =>
-        e.injectTableFunction((
-          FunctionIdentifier(name),
-          new ExpressionInfo("graft.sources.v2", name),
-          builder))
-    }
-    e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
-    e.injectOptimizerRule(_ => graft.plans.AsOfPushdownRule)
   }
 }

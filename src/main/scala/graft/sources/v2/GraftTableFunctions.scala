@@ -20,9 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the table's columns plus `_change_type` ∈ insert|delete) between
   * two retained versions; `table_history` returns the
   * [[Manifest.history]] ledger (one row per retained version). Both
-  * are registered as Catalyst TABLE FUNCTIONS ([[graft.functions
-  * .GraftExtensions]] injects them; [[graft.functions.GraftFunctions
-  * .register]] adds them to a live session), so the returned plan is
+  * are registered as Catalyst TABLE FUNCTIONS by
+  * [[graft.functions.GraftFunctions.register]], so the returned plan is
   * the manifest read's own DISTRIBUTED plan — the feed's cost stays
   * ∝ the commits being explained (the readChanges contract), never a
   * driver collect.

@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class AsOfSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.session(4)
 
   import org.apache.spark.sql.functions.col
 
@@ -157,5 +152,24 @@ class AsOfSpec extends AnyFunSuite {
     assert(plan.contains("AsOfJoin ["), s"custom exec missing:\n$plan") // nodeName strips "Exec"
     assert(plan.contains("Exchange hashpartitioning(user_id"), s"no co-partitioning:\n$plan")
     assert(plan.contains("Sort [user_id"), s"inputs not sorted:\n$plan")
+  }
+
+  test("repeat registration: AsOfJoin.dataframe and GraftFunctions.register " +
+      "install each strategy, rule and function once on a plain session") {
+    import graft.plans.{AsOfPushdownRule, AsOfStrategy}
+    import spark.implicits._
+    val l = Seq((1L, 10L)).toDF("k", "ts")
+    val r = Seq((1L, 5L, "a")).toDF("k", "ts", "v")
+    (1 to 2).foreach { _ =>
+      AsOfJoin.dataframe(spark, l, r, Seq("k"), "ts", "ts", Seq("v" -> "v"))
+      graft.functions.GraftFunctions.register(spark)
+    }
+    assert(spark.experimental.extraStrategies.count(_ == AsOfStrategy) == 1)
+    assert(spark.experimental.extraOptimizations.count(_ == AsOfPushdownRule) == 1)
+    assert(!spark.sql("SELECT simhash64(split('a b c', ' '))").head().isNullAt(0))
+    val tbl = java.nio.file.Files.createTempDirectory("graft_asof_reg").toString + "/t"
+    graft.sources.Manifest.create(spark, tbl, Seq((1L, 2L)).toDF("id", "v"))
+    assert(spark.sql(s"SELECT version FROM table_history('$tbl')")
+      .collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 }

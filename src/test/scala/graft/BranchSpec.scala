@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `<table>/_branches/<name>`. */
 class BranchSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.session(4)
 
   private def fresh(name: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_br_$name").toString

@@ -15,13 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class CatalogSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.graft", "graft.sources.v2.GraftCatalog")
-      .getOrCreate()
+    val s = SparkEntry.session(4)
+    s.conf.set("spark.sql.catalog.graft", "graft.sources.v2.GraftCatalog")
     SparkSession.setActiveSession(s)
     s
   }

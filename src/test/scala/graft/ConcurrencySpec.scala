@@ -26,12 +26,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ConcurrencySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.session(8)
 
   test("racing appenders + deleter + tagger + vacuum: gap-free version " +
       "chain, every returned commit serveable exactly once") {

@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * banded range join, Z-order layout. */
 class CurateSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.session(4)
 
   import org.apache.spark.sql.functions.col
 

@@ -15,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class FixtureSchemaSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.session(4)
 
   test("events.ts normalizes to TimestampType regardless of fixture dtype") {
     val ts = Tables.events(spark, sf).schema("ts").dataType

@@ -6,12 +6,7 @@ import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
 class FunnelSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.session(4)
 
   import org.apache.spark.sql.functions.col
 

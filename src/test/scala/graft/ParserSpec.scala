@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ParserSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkEntry.session(4)
 
   private def cube = Cubes.lineitemCube(spark, sf)
 
