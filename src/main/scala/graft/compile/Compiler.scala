@@ -33,9 +33,9 @@ object Compiler {
     val cube = q.cube
 
     // ---- statsOnly: metadata-served aggregates -----------------------
-    // Handled BEFORE asOf on purpose: statsAggregate serves the CURRENT
-    // snapshot's sidecar, so the combination must refuse loudly rather
-    // than let the stripped-AsOf recursion serve the wrong epoch.
+    // Handled BEFORE asOf on purpose: compileStatsOnly turns an AsOf
+    // option into the stats serve's version pin itself, where the
+    // stripped-AsOf recursion would serve the current epoch.
     if (q.options.contains(QueryOpt.StatsOnly))
       return compileStatsOnly(q)
 
@@ -267,35 +267,37 @@ object Compiler {
     m.args.foldLeft(r.met(m.metric)) { case (met, (k, v)) => met.applyArg(k, v) }
 
   /** The `statsOnly` route: count/min/max/sum served from the
-    * manifested fact's ANALYZE sidecars at the driver
-    * ([[graft.sources.Manifest.statsAggregate]]) — zero data-file opens
-    * on a covered snapshot, a LocalRelation plan instead of a scan.
-    * SLICES serve too, when every slice is a bare fact column of
-    * numeric-or-string type — the GROUP BY folds from per-file
-    * scalars where each file's key envelope is a point
-    * ([[graft.sources.Manifest.statsAggregateGrouped]]; "rows per day
-    * this quarter" on a day-laid-out table is one sidecar read). An
+    * manifested fact's ANALYZE sidecars at the driver — zero data-file
+    * opens on a covered snapshot, a LocalRelation plan instead of a
+    * scan. One call to [[graft.sources.Manifest.statsAggregateGrouped]]
+    * serves every shape: flat, filtered, and sliced. SLICES serve when
+    * every slice is a bare fact column of numeric-or-string type — the
+    * GROUP BY folds from per-file scalars where each file's key
+    * envelope is a point ("rows per day this quarter" on a
+    * day-laid-out table is one sidecar read). An
     * EXPLICIT opt-in, so every unservable shape refuses loudly
     * (V4-style) instead of silently degrading: sub-field chains,
     * expression-valued or joined dimensions,
     * non-exactly-servable filters (a WHERE serves only when it is
     * EXACTLY a conjunction of inclusive numeric ranges — then
     * fully-covered files serve from their scalars and only boundary
-    * files scan, [[graft.sources.Manifest.statsAggregateWhere]]),
+    * files scan),
     * non-flat grouping, metric-level filters, plan-backed
     * or expression-valued metrics (recognition is
     * [[org.apache.spark.sql.GraftBridge.statsServableAgg]]'s strict
     * count/min/max/sum-of-a-bare-attribute match), joined columns, and
     * non-numeric or decimal columns (the sidecar's double scalars are
-    * exact below 2⁵³ — decimals would silently lose precision).
+    * exact below 2⁵³ — decimals would silently lose precision), and
+    * integral sums or min/max past 2⁵³
+    * ([[graft.sources.Manifest.statsInexact]]).
     * Sum/min/max re-cast to the type the normal plan would produce, so
     * a statsOnly result is indistinguishable from the scan's.
     *
     * COMPOSES with asOf: data files are immutable, so any retained
     * sidecar's rows filtered to the pinned snapshot's file list
     * describe that snapshot exactly — "how big was release
-    * corpus-v1.0" stays a metadata read years later
-    * ([[graft.sources.Manifest.statsAggregate]]'s `version` pin). */
+    * corpus-v1.0" stays a metadata read years later (the serve's
+    * `version` pin). */
   private def compileStatsOnly(q: CubeQuery): DataFrame = {
     import graft.sources.Manifest
     import org.apache.spark.sql.types._
@@ -416,70 +418,19 @@ object Compiler {
         }
         (key, form, c)
       }
-    val served =
-      if (groupKeys.nonEmpty)
-        Manifest.statsAggregateGrouped(spark, tbl, groupKeys.map(_._2),
-          forms.flatMap(_._3).distinct, whereBounds, pinned)
-      else if (whereBounds.isEmpty)
-        Manifest.statsAggregate(spark, tbl,
-          forms.flatMap(_._3).distinct, pinned)
-      else Manifest.statsAggregateWhere(spark, tbl,
-        forms.flatMap(_._3).distinct, whereBounds, pinned)
-    // integral sums fold through the sidecar's per-file DOUBLE
-    // scalars and cast back to Long below — exact only while every
-    // partial stays below 2⁵³. Decimals are refused outright above;
-    // large longs get the same honesty here, from the served row's
-    // own scalars (a one-row LocalRelation — the check is free):
-    // single-signed columns are exact iff |total| < 2⁵³ (every
-    // per-file sum and fold prefix is bounded by the total); mixed
-    // signs need the conservative nn·max(|min|,|max|) < 2⁵³ bound,
-    // since cancellation can hide an imprecise partial behind a
-    // small total.
-    def isIntegral(c: String): Boolean = factSchema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val intSums = forms.collect {
-      case (key, "sum", Some(c)) if isIntegral(c) => (key, c) }
-    // min/max of integral columns cast the sidecar's double scalar
-    // back below — the same 2^53 honesty applies: a Long min/max past
-    // the double-exact range (snowflake ids) would round silently
-    val intMinMax = forms.collect {
-      case (key, f @ ("min" | "max"), Some(c)) if isIntegral(c) => (key, f, c) }
-    if (intSums.nonEmpty || intMinMax.nonEmpty) {
-      val exactCap = 9007199254740992d // 2^53
-      // one row flat, one row PER GROUP grouped — every served row
-      // must clear the guard (a LocalRelation either way: collecting
-      // re-reads metadata, never the table)
-      served.collect().foreach { row =>
-        def dbl(n: String): Option[Double] = {
-          val i = row.fieldIndex(n)
-          if (row.isNullAt(i)) None else Some(row.getDouble(i))
-        }
-        intSums.foreach { case (key, c) =>
-          (dbl(s"${c}_min"), dbl(s"${c}_max"), dbl(s"${c}_sum")) match {
-            case (Some(mi), Some(ma), Some(su)) =>
-              val nn = row.getAs[Long](s"${c}_nn")
-              val exact =
-                if (mi >= 0 || ma <= 0) math.abs(su) < exactCap
-                else nn.toDouble * math.max(math.abs(mi), math.abs(ma)) < exactCap
-              if (!exact) refuse(
-                s"measure '$key': sum($c) folds through double file scalars " +
-                  "and exceeds 2^53 — the exact-looking integer would be " +
-                  "silently wrong; run the full query for this sum")
-            case _ => () // no non-null rows: sum is NULL, nothing to guard
-          }
-        }
-        intMinMax.foreach { case (key, f, c) =>
-          dbl(s"${c}_$f").foreach { v =>
-            if (math.abs(v) >= exactCap) refuse(
-              s"measure '$key': $f($c) folds through double file scalars and " +
-                "|value| >= 2^53 — the exact-looking integer would be " +
-                s"silently rounded; run the full query for this $f")
-          }
-        }
+    val served = Manifest.statsAggregateGrouped(spark, tbl,
+      groupKeys.map(_._2), forms.flatMap(_._3).distinct, whereBounds, pinned)
+    // integral sums and min/max cast the sidecar's double scalars back
+    // below: refuse any that could round (checked per served row — one
+    // flat, one per group; a LocalRelation, so the collect re-reads
+    // metadata, never the table)
+    Manifest.statsInexact(served.collect().toSeq,
+        forms.collect { case (_, f, Some(c)) => (f, c) }, factSchema)
+      .foreach { case ((f, c), why) =>
+        val key = forms.collectFirst { case (k, `f`, Some(`c`)) => k }.get
+        refuse(s"measure '$key': $f($c) folds through double file " +
+          s"scalars and $why; run the full query for this $f")
       }
-    }
     val outCols: Seq[Column] = groupKeys.map { case (key, c) =>
       F.col(c).as(key) } ++ forms.map { case (key, form, cOpt) =>
       (form, cOpt) match {

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.model.CubeQueryException
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
 /** SQL-surface registration for the engine's custom expressions, so
@@ -68,16 +69,19 @@ object GraftFunctions {
 
   /** Imperative registration on a live session — scalar expressions
     * AND the manifest's table-valued functions (`table_changes`,
-    * `table_history`). */
+    * `table_history`). Only missing names register, so a repeat call
+    * leaves the session's entries (and its log) untouched. */
   def register(spark: SparkSession): Unit = {
+    val scalars = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!scalars.functionExists(FunctionIdentifier(name)))
+        scalars.createOrReplaceTempFunction(name, builder, "built-in")
     }
+    val tables = spark.sessionState.tableFunctionRegistry
     graft.sources.v2.GraftTableFunctions.all.foreach {
       case (name, builder) =>
-        spark.sessionState.tableFunctionRegistry
-          .createOrReplaceTempFunction(name, builder, "built-in")
+        if (!tables.functionExists(FunctionIdentifier(name)))
+          tables.createOrReplaceTempFunction(name, builder, "built-in")
     }
   }
 }

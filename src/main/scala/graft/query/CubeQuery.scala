@@ -88,12 +88,14 @@ object QueryOpt {
     * Position-independent: the first AsOf in the option list wins. */
   final case class AsOf(version: Option[Long],
       tsMillis: Option[Long], tag: Option[String] = None) extends QueryOpt
-  /** METADATA-SERVED table-level aggregates: route the query to
-    * [[graft.sources.Manifest.statsAggregate]] — count/min/max/sum
-    * folded at the driver from the ANALYZE sidecar, zero data-file
-    * opens on a covered snapshot. Explicit opt-in with V4-style loud
-    * refusal when the query shape is not servable (dimensions,
-    * filters, non-flat grouping, an exotic metric, asOf). */
+  /** METADATA-SERVED aggregates: route the query to
+    * [[graft.sources.Manifest.statsAggregateGrouped]] — count/min/max/
+    * sum folded at the driver from the ANALYZE sidecars, zero data-file
+    * opens on a covered snapshot; bare-column slices, exact inclusive
+    * range filters and asOf compose. Explicit opt-in with V4-style
+    * loud refusal when the query shape is not servable (joined or
+    * expression-valued dimensions, other filters, non-flat grouping,
+    * an exotic metric, an integral result past 2⁵³). */
   case object StatsOnly extends QueryOpt
 }
 

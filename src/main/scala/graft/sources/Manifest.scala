@@ -1465,7 +1465,7 @@ object Manifest {
     * completeness buys: a filtered aggregate can be answered from
     * per-file stats alone for files fully inside every range (and
     * with no NULLs in the predicate columns), scanning only the
-    * boundary — [[statsAggregateWhere]]. Contradictory bounds are
+    * boundary — [[statsAggregateGrouped]]. Contradictory bounds are
     * KEPT (lo > hi ⇒ the predicate is unsatisfiable ⇒ zero rows). */
   private[graft] def boundsFromPredComplete(pred: Column)
       : Option[Seq[(String, Double, Double)]] = {
@@ -1512,167 +1512,123 @@ object Manifest {
       }.sortBy(_._1))
   }
 
-  /** FILTERED metadata-served aggregates: [[statsAggregate]] under a
-    * conjunction of inclusive numeric ranges (a COMPLETE predicate —
-    * [[boundsFromPredComplete]]'s contract). Per covered file, the
-    * envelope decides three ways:
+  /** [[statsAggregateGrouped]] with no group keys and no ranges: one
+    * whole-table row. */
+  def statsAggregate(spark: SparkSession, table: String,
+      cols: Seq[String], version: Option[Long] = None): DataFrame =
+    statsAggregateGrouped(spark, table, Nil, cols, Nil, version)
+
+  /** [[statsAggregateGrouped]] with no group keys: one row under a
+    * conjunction of inclusive numeric ranges. */
+  def statsAggregateWhere(spark: SparkSession, table: String,
+      cols: Seq[String], where: Seq[(String, Double, Double)],
+      version: Option[Long] = None): DataFrame =
+    statsAggregateGrouped(spark, table, Nil, cols, where, version)
+
+  /** METADATA-SERVED aggregates — `count(*)` / `count(c)` / `min` /
+    * `max` / `sum`, optionally under `where` ranges and optionally
+    * `GROUP BY` file-constant keys, answered from DRIVER METADATA: the
+    * [[analyzeFiles]] sidecar's per-file scalars folded at the driver
+    * instead of a table scan. At 100 TB a `count(*)` becomes one
+    * sidecar parquet read (#files rows) and zero data-file opens — the
+    * Iceberg/Delta scan-planning-answers-aggregates trade.
     *
+    * `where` is a conjunction of inclusive numeric ranges (a COMPLETE
+    * predicate — [[boundsFromPredComplete]]'s contract). Per covered
+    * file, the envelope decides three ways:
     *  - DISJOINT from any range (or the range column all-NULL in the
     *    file): contributes nothing;
     *  - FULLY INSIDE every range AND no NULLs in any range column
     *    (`nn == cnt` — a NULL row never satisfies a range): every row
     *    matches, so the file's stored scalars serve as-is;
-    *  - otherwise (boundary / NULL-bearing / uncovered): the file
-    *    scans WITH the predicate.
-    *
+    *  - otherwise (boundary / NULL-bearing): the file scans WITH the
+    *    predicate.
     * Cost is ∝ boundary + unanalyzed files — on a range-clustered
-    * 100 TB table a `day BETWEEN` count touches the two edge files.
-    * Same output row and soundness ladder as [[statsAggregate]]
-    * (DVs ⇒ live scan; missing stats ⇒ scan); `files_scanned` counts
-    * the files that actually opened. */
-  def statsAggregateWhere(spark: SparkSession, table: String,
-      cols: Seq[String], where: Seq[(String, Double, Double)],
-      version: Option[Long] = None): DataFrame = {
-    require(where.nonEmpty,
-      "statsAggregateWhere needs at least one range (else statsAggregate)")
-    val snap = resolveSnapshot(spark, table, version, "statsAggregateWhere")
-    val predCol = where.map { case (c, lo, hi) =>
-      F.col(c) >= lo && F.col(c) <= hi }.reduce(_ && _)
-    val allFiles = listSnapshotFiles(spark, table, snap)
-    def fallback(): DataFrame = {
-      val (cnt, per) = statsScanAgg(readSnapshotData(spark, table, snap),
-        cols, Some(predCol))
-      statsEmit(spark, cols, cnt, per, "scan", allFiles.size.toLong)
-    }
-    if (snap.meta.contains(DvKey)) return fallback()
-    if (snap.meta.contains(PartitionKey)) return fallback()
-    val (sch, rows) = statsSidecarFor(spark, table, snap)
-      .getOrElse(return fallback())
-    // mapped snapshots: sidecar lookups under PHYSICAL names, output
-    // under the caller's logical ones (see statsAggregate)
-    val pm = physOf(snap)
-    val colsP = cols.map(pm)
-    val whereP = where.map(r => (pm(r._1), r._2, r._3))
-    val needed = (colsP ++ whereP.map(_._1)).distinct
-    if (!statsCovers(sch, needed)) return fallback()
-    val fi = sch.fieldIndex("file")
-    val allSet = allFiles.map(normPath).toSet
-    val covered = rows.filter(r => allSet.contains(normPath(r.getString(fi))))
-    val known = covered.map(r => normPath(r.getString(fi))).toSet
-    val uncovered = allFiles.filterNot(f => known.contains(normPath(f)))
-    def dbl(r: org.apache.spark.sql.Row, n: String): Option[Double] = {
-      val i = sch.fieldIndex(n)
-      if (r.isNullAt(i)) None else Some(r.getDouble(i))
-    }
-    // classify covered files against every range
-    sealed trait Cls; case object Disjoint extends Cls
-    case object Full extends Cls; case object Boundary extends Cls
-    def classify(r: org.apache.spark.sql.Row): Cls = {
-      val states = whereP.map { case (c, lo, hi) =>
-        (dbl(r, s"${c}__min"), dbl(r, s"${c}__max")) match {
-          case (Some(mi), Some(ma)) =>
-            if (ma < lo || mi > hi) Disjoint
-            else if (mi >= lo && ma <= hi &&
-              dbl(r, s"${c}__nn") == dbl(r, s"${c}__cnt")) Full
-            else Boundary
-          case _ => Disjoint // all-NULL range column: no row matches
-        }
-      }
-      if (states.contains(Disjoint)) Disjoint
-      else if (states.forall(_ == Full)) Full
-      else Boundary
-    }
-    val (fullF, rest) = covered.partition(r => classify(r) == Full)
-    val boundary = rest.filter(r => classify(r) == Boundary)
-      .map(_.getString(fi))
-    val toScan = boundary ++ uncovered
-    val (dCnt, dPer) =
-      if (toScan.isEmpty) (0L, statsZero(cols))
-      else statsScanAgg(
-        toLogicalProj(snap,
-          readFilesLive(spark, table, snap, toScan.toIndexedSeq)),
-        cols, Some(predCol))
-    val (cnt, per) = statsFold(sch, fullF, colsP,
-      s"${needed.head}__cnt", dCnt, dPer)
-    statsEmit(spark, cols, cnt, per,
-      if (toScan.isEmpty) "stats" else "stats_delta",
-      toScan.size.toLong)
-  }
-
-  /** GROUPED metadata-served aggregates — `GROUP BY day` count/min/
-    * max/sum answered from DRIVER METADATA when every group key is
-    * FILE-CONSTANT: on a partitioned or clustered layout each file's
-    * key envelope collapses to a point (`min == max`) with no NULL
-    * keys (`nn == cnt` — a NULL key is its own SQL group the envelope
-    * cannot see), so the file's stored scalars belong wholly to that
-    * group and the whole query folds at the driver. The most common
-    * real shape at 100 TB — "rows per day this quarter" on a
-    * day-laid-out table — becomes one sidecar read and ZERO data-file
-    * opens. Numeric keys serve from the `stats_v` sidecar; string
-    * keys (day strings!) from `strstats_v`, whose per-file counts
-    * exist for exactly this proof. Hive partition columns are the
-    * canonical file-constant key and serve through the same envelopes
-    * once analyzed.
+    * table a `day BETWEEN` count touches the two edge files.
+    *
+    * A group key serves when it is FILE-CONSTANT: on a partitioned or
+    * clustered layout each file's key envelope collapses to a point
+    * (`min == max`) with no NULL keys (`nn == cnt` — a NULL key is its
+    * own SQL group the envelope cannot see), so the file's scalars
+    * belong wholly to that group — "rows per day this quarter" on a
+    * day-laid-out table is one sidecar read. Numeric keys serve from
+    * the `stats_v` sidecar; string keys (day strings!) from
+    * `strstats_v`, whose per-file counts exist for exactly this proof;
+    * hive partition columns serve from the file PATHS. The key is a
+    * partition/cluster grain by construction (day, source, shard); a
+    * group-by-user_id does not belong here and simply scans.
     *
     * Soundness ladder, per FILE (never per query, except where noted):
-    *  - `where` ranges classify as in [[statsAggregateWhere]]:
-    *    disjoint files contribute nothing, fully-inside files serve,
-    *    boundary/NULL-bearing files scan with the residual predicate;
-    *  - a file whose key envelope is NOT a point (unclustered), has
-    *    NULL keys, predates the sidecar, or carries an integral key
-    *    past 2⁵³ (double identity would silently merge groups) SCANS;
-    *  - DVs on the snapshot, or a missing/stale sidecar family ⇒ full
-    *    grouped scan (`served_from = "scan"`), never a wrong answer;
+    *  - files the sidecar does not cover (appended since the last
+    *    ANALYZE), boundary files, and files whose key is not a point,
+    *    has NULLs, or is an integral value past 2⁵³ (double identity
+    *    would silently merge groups) are scanned — ALONE — and merged
+    *    (`served_from = "stats_delta"`, `files_scanned` = that count);
+    *  - a snapshot carrying MoR delete vectors falls back to the live
+    *    scan (raw-file stats count masked rows; correcting min/max
+    *    from a positional mask is impossible without reading) — fold
+    *    the vectors and re-analyze to restore metadata serving;
+    *  - no sidecar / a sidecar predating a requested column or this
+    *    stat vintage ⇒ full scan (`served_from = "scan"`), never a
+    *    wrong answer;
     *  - a HIVE layout with any file to scan falls back to the full
     *    directory-read scan — leaf-file reads would drop the
-    *    partition columns mid-group.
-    *
-    * The fold is driver-side at #files + #scanned-groups grain — the
-    * key is a partition/cluster grain by construction (day, source,
-    * shard), NOT a high-cardinality column; a group-by-user_id does
-    * not belong here and will simply scan.
+    *    partition columns.
     *
     * Output: one row per group — the key columns under their fact
     * types, then `cnt` and per requested column `<c>_nn/_min/_max/
-    * _sum` ([[statsAggregate]] shapes), then the `served_from` ∈
-    * {stats, stats_delta, scan} and `files_scanned` pins. Sorted by
-    * key for determinism. */
+    * _sum` (SQL semantics — all-NULL ⇒ NULL min/max/sum), then the
+    * `served_from` ∈ {stats, stats_delta, scan} and `files_scanned`
+    * pins that make the serving mode itself verifiable. Sorted by key
+    * for determinism. With no keys it is exactly ONE row (`cnt` 0 when
+    * nothing matches). A LocalRelation — no data-file IO in the plan.
+    * Doubles are exact below 2⁵³ (counts, integral-valued sums); an
+    * integral result that could round is [[statsInexact]]'s to refuse.
+    *
+    * `version` pins the serve to a RETAINED snapshot: data files are
+    * immutable, so ANY retained sidecar's rows, filtered to the files
+    * that snapshot actually lists, describe it exactly — "how big was
+    * release v3" is a metadata read years later. */
   def statsAggregateGrouped(spark: SparkSession, table: String,
       groupBy: Seq[String], cols: Seq[String],
       where: Seq[(String, Double, Double)] = Nil,
       version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.types.StringType
-    require(groupBy.nonEmpty,
-      "statsAggregateGrouped needs group keys (else statsAggregate)")
+    import org.apache.spark.sql.types.{DataType, StringType}
     val snap = resolveSnapshot(spark, table, version, "statsAggregateGrouped")
-    // schema WITHOUT a full relation init (the statsAggregate lesson):
-    // the committed-schema stamp when present, else one footer; hive
-    // layouts keep the relation read (a leaf footer lacks the
-    // partition columns, whose types come from directory inference)
-    val factSchema: org.apache.spark.sql.types.StructType =
-      snap.meta.get(SchemaKey) match {
-        case Some(json) =>
-          val phys = org.apache.spark.sql.types.DataType.fromJson(json)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-          // the caller speaks LOGICAL names on a mapped snapshot
-          mappingOf(snap) match {
-            case None => phys
-            case Some(pairs) => org.apache.spark.sql.types.StructType(
-              pairs.map { case (l, ph) =>
-                val f = phys(ph)
-                org.apache.spark.sql.types.StructField(l, f.dataType,
-                  f.nullable)
-              })
-          }
-        case None if !snap.meta.contains(PartitionKey) =>
-          listSnapshotFiles(spark, table, snap).headOption
-            .map(f => spark.read.parquet(f).schema)
-            .getOrElse(readSnapshotRaw(spark, table, snap).schema)
-        case None => readSnapshotRaw(spark, table, snap).schema
+    // key types WITHOUT a full relation init (at 5k files its footer
+    // pass costs seconds): the committed-schema stamp when present,
+    // else one footer; hive layouts keep the relation read (a leaf
+    // footer lacks the partition columns, whose types come from
+    // directory inference). An ungrouped serve needs no schema.
+    val keyTypes: Seq[DataType] = if (groupBy.isEmpty) Nil else {
+      val factSchema: org.apache.spark.sql.types.StructType =
+        snap.meta.get(SchemaKey) match {
+          case Some(json) =>
+            val phys = org.apache.spark.sql.types.DataType.fromJson(json)
+              .asInstanceOf[org.apache.spark.sql.types.StructType]
+            // the caller speaks LOGICAL names on a mapped snapshot
+            mappingOf(snap) match {
+              case None => phys
+              case Some(pairs) => org.apache.spark.sql.types.StructType(
+                pairs.map { case (l, ph) =>
+                  val f = phys(ph)
+                  org.apache.spark.sql.types.StructField(l, f.dataType,
+                    f.nullable)
+                })
+            }
+          case None if !snap.meta.contains(PartitionKey) =>
+            listSnapshotFiles(spark, table, snap).headOption
+              .map(f => spark.read.parquet(f).schema)
+              .getOrElse(readSnapshotRaw(spark, table, snap).schema)
+          case None => readSnapshotRaw(spark, table, snap).schema
+        }
+      groupBy.map { k =>
+        require(factSchema.fieldNames.contains(k),
+          s"Manifest.statsAggregateGrouped: '$k' is not a column of $table")
+        factSchema(k).dataType
       }
-    groupBy.foreach(k => require(factSchema.fieldNames.contains(k),
-      s"Manifest.statsAggregateGrouped: '$k' is not a column of $table"))
-    val strKey = groupBy.map(k => factSchema(k).dataType == StringType)
+    }
+    val strKey = keyTypes.map(_ == StringType)
     val predCol = where.map { case (c, lo, hi) =>
       F.col(c) >= lo && F.col(c) <= hi }.reduceOption(_ && _)
     val allFiles = listSnapshotFiles(spark, table, snap)
@@ -1682,7 +1638,7 @@ object Manifest {
     // sidecar coverage — `GROUP BY day` over a day-partitioned 100 TB
     // table is a pure metadata read (the path is the statistic)
     val partCols: Set[String] =
-      if (hiveLayout(spark, table, snap))
+      if (groupBy.nonEmpty && hiveLayout(spark, table, snap))
         partitionColumnsOf(spark, table, snap).toSet
       else Set.empty
     def pathVal(nf: String, k: String): Option[String] =
@@ -1691,9 +1647,9 @@ object Manifest {
           .ExternalCatalogUtils.unescapePathName(s.substring(k.length + 1)))
         .filter(_ != "__HIVE_DEFAULT_PARTITION__")
 
-    // the grouped analogue of statsScanAgg: per group key tuple
+    // the scan shape of every fallback and delta: per group key tuple
     // (numeric keys carried as Double — the sidecar's identity), the
-    // same cnt/nn/min/max/sum scalars
+    // same cnt/nn/min/max/sum scalars the sidecar serves
     def scanAgg(df: DataFrame): Seq[(Seq[Any], Long, StatsPer)] = {
       val keyCols = groupBy.zip(strKey).map { case (k, s) =>
         (if (s) F.col(k) else F.col(k).cast("double")).as(s"__k_$k") }
@@ -1718,8 +1674,11 @@ object Manifest {
     }
     def emit(groups: Seq[(Seq[Any], Long, StatsPer)], from: String,
         scanned: Long): DataFrame =
-      statsEmitGrouped(spark, groupBy, strKey, factSchema, cols,
-        groups, from, scanned)
+      statsEmitGrouped(spark, groupBy, keyTypes, cols,
+        // no keys: always one row — the empty fold is cnt 0, NULL scalars
+        if (groups.isEmpty && groupBy.isEmpty)
+          Seq((Nil, 0L, cols.map(_ => (0L, None, None, None))))
+        else groups, from, scanned)
     def fallback(): DataFrame =
       emit(scanAgg(readSnapshotData(spark, table, snap)), "scan",
         allFiles.size.toLong)
@@ -1738,29 +1697,31 @@ object Manifest {
       case (k, true) if !partCols.contains(k) => k }
     val neededNum = (colsP ++ whereP.map(_._1) ++ numKeys.map(pm)).distinct
     // numeric sidecar: required whenever any measure / range / numeric
-    // key needs it; the cnt anchor comes from it when possible
+    // key needs it, and for an ungrouped count(*) — its per-file cnt
+    // is the row count, so no footer opens
     val numSide =
-      if (neededNum.isEmpty) None
-      else statsSidecarFor(spark, table, snap) match {
+      if (neededNum.isEmpty && groupBy.nonEmpty) None
+      else newestSidecar(spark, table, snap, statsDir) match {
         case Some((sch, rows)) if statsCovers(sch, neededNum) =>
           Some((sch, rows))
         case _ => return fallback()
       }
+    // the per-file row count: the first needed column's `cnt`, else
+    // (a count(*)-only serve) any analyzed column's — all equal
+    val cntField: Option[String] = numSide match {
+      case None => None
+      case Some((sch, _)) => Some(neededNum.headOption.map(c => s"${c}__cnt")
+        .orElse(sch.fieldNames.find(_.endsWith("__cnt")))
+        .getOrElse(return fallback()))
+    }
     val strSide =
       if (strKeys.isEmpty) None
-      else {
-        val fs = fsFor(spark, table)
-        Some(snap.version)
-          .filter(v => fs.exists(strStatsDir(table, v)))
-          .orElse(versions(spark, table)
-            .filter(v => fs.exists(strStatsDir(table, v))).lastOption)
-          .flatMap(v => sidecarRows(spark, strStatsDir(table, v))) match {
-          case Some((sch, rows)) if strKeys.map(pm).forall(k =>
-              Seq(s"${k}__smin", s"${k}__smax", s"${k}__scnt",
-                s"${k}__snn").forall(sch.fieldNames.contains)) =>
-            Some((sch, rows))
-          case _ => return fallback()
-        }
+      else newestSidecar(spark, table, snap, strStatsDir) match {
+        case Some((sch, rows)) if strKeys.map(pm).forall(k =>
+            Seq(s"${k}__smin", s"${k}__smax", s"${k}__scnt",
+              s"${k}__snn").forall(sch.fieldNames.contains)) =>
+          Some((sch, rows))
+        case _ => return fallback()
       }
     val numMap = numSide.map { case (sch, rows) =>
       (sch, rows.map(r => normPath(
@@ -1768,7 +1729,12 @@ object Manifest {
     val strMap = strSide.map { case (sch, rows) =>
       (sch, rows.map(r => normPath(
         r.getString(sch.fieldIndex("file"))) -> r).toMap) }
-    val exactCap = 9007199254740992d // 2^53: double key identity limit
+    sealed trait Cls; object Disjoint extends Cls
+    object Full extends Cls; object Boundary extends Cls
+    // a numeric key value is a group identity only while the double
+    // holds it exactly
+    def exactKey(d: Double, dt: DataType): Boolean =
+      !integralType(dt) || math.abs(d) < ExactDoubleCap
     val served = Seq.newBuilder[(Seq[Any], Long, StatsPer)]
     val toScan = Seq.newBuilder[String]
     var scanCount = 0
@@ -1785,9 +1751,7 @@ object Manifest {
       if (numMap.nonEmpty && nr.isEmpty || strMap.nonEmpty && sr.isEmpty) {
         toScan += f; scanCount += 1
       } else {
-        // where classification (statsAggregateWhere's three-way split)
-        sealed trait Cls; object Disjoint extends Cls
-        object Full extends Cls; object Boundary extends Cls
+        // where classification against every range
         val wcls: Cls = {
           val states = whereP.map { case (c, lo, hi) =>
             (dbl(nr.get, s"${c}__min"), dbl(nr.get, s"${c}__max")) match {
@@ -1805,47 +1769,32 @@ object Manifest {
         if (wcls != Disjoint) {
           // key extraction: every key must be file-constant & NULL-free
           val key: Option[Seq[Any]] =
-            groupBy.zip(strKey).foldLeft(Option(Seq.empty[Any])) {
+            groupBy.zip(keyTypes).foldLeft(Option(Seq.empty[Any])) {
               case (None, _) => None
               // hive partition key: the directory value IS the
               // file-constant (a default/NULL partition scans)
-              case (Some(acc), (k, isStr)) if partCols.contains(k) =>
+              case (Some(acc), (k, dt)) if partCols.contains(k) =>
                 pathVal(nf, k) match {
-                  case Some(raw) if isStr => Some(acc :+ (raw: Any))
+                  case Some(raw) if dt == StringType => Some(acc :+ (raw: Any))
                   case Some(raw) =>
                     val d = try raw.toDouble
                       catch { case _: NumberFormatException => Double.NaN }
-                    val integral = factSchema(k).dataType match {
-                      case org.apache.spark.sql.types.LongType |
-                           org.apache.spark.sql.types.IntegerType |
-                           org.apache.spark.sql.types.ShortType |
-                           org.apache.spark.sql.types.ByteType => true
-                      case _ => false
-                    }
-                    if (!d.isNaN && (!integral || math.abs(d) < exactCap))
-                      Some(acc :+ (d: Any))
+                    if (!d.isNaN && exactKey(d, dt)) Some(acc :+ (d: Any))
                     else None
                   case None => None
                 }
-              case (Some(acc), (k0, false)) =>
+              case (Some(acc), (k0, dt)) if dt != StringType =>
                 val k = pm(k0)
                 val (mi, ma) = (dbl(nr.get, s"${k}__min"),
                   dbl(nr.get, s"${k}__max"))
                 val pure = dbl(nr.get, s"${k}__nn") == dbl(nr.get, s"${k}__cnt")
-                val integral = factSchema(k0).dataType match {
-                  case org.apache.spark.sql.types.LongType |
-                       org.apache.spark.sql.types.IntegerType |
-                       org.apache.spark.sql.types.ShortType |
-                       org.apache.spark.sql.types.ByteType => true
-                  case _ => false
-                }
                 (mi, ma) match {
                   case (Some(a), Some(b)) if a == b && pure &&
-                      (!integral || math.abs(a) < exactCap) =>
+                      exactKey(a, dt) =>
                     Some(acc :+ (a: Any))
                   case _ => None
                 }
-              case (Some(acc), (k0, true)) =>
+              case (Some(acc), (k0, _)) =>
                 val k = pm(k0)
                 val (sch, row) = sr.get
                 def s(n: String): Option[String] = {
@@ -1861,21 +1810,21 @@ object Manifest {
             }
           (key, wcls) match {
             case (Some(kv), Full) =>
-              val cnt: Long =
-                if (neededNum.nonEmpty) {
+              val cnt: Long = cntField match {
+                case Some(cf) =>
                   val (sch, row) = nr.get
-                  row.getDouble(sch.fieldIndex(
-                    s"${neededNum.head}__cnt")).toLong
-                } else if (strKeys.nonEmpty) {
+                  row.getDouble(sch.fieldIndex(cf)).toLong
+                case None if strKeys.nonEmpty =>
                   val (ssch, srow) = sr.get
                   srow.getString(ssch.fieldIndex(
                     s"${pm(strKeys.head)}__scnt")).toLong
-                } else
+                case None =>
                   // every key is a hive partition column and no
                   // measure needs a sidecar: the per-file count comes
                   // from the parquet FOOTER — still driver metadata,
                   // no row deserialized
                   footerRowCount(spark, new Path(f))
+              }
               val per: StatsPer = colsP.map { c =>
                 def d(n: String) = dbl(nr.get, n)
                 (d(s"${c}__nn").fold(0L)(_.toLong), d(s"${c}__min"),
@@ -1889,7 +1838,7 @@ object Manifest {
     }
     val scanFiles = toScan.result()
     // hive layout: a leaf-file delta scan would drop the partition
-    // columns mid-group — any residue falls back to the full scan
+    // columns — any residue falls back to the full scan
     if (partitioned && scanFiles.nonEmpty) return fallback()
     val delta =
       if (scanFiles.isEmpty) Nil
@@ -1912,20 +1861,19 @@ object Manifest {
       scanCount.toLong)
   }
 
-  /** The grouped LocalRelation emitter: key columns restored to their
-    * FACT types (the sidecar's doubles are identity below 2⁵³ — the
-    * serve already refused past it), then the statsEmit scalar shapes
-    * and serving pins. */
+  /** The LocalRelation every stats serve returns: key columns restored
+    * to their FACT types (the sidecar's doubles are identity below
+    * 2⁵³ — the serve already refused past it), then `cnt`, the
+    * per-column scalars, and the serving pins. */
   private def statsEmitGrouped(spark: SparkSession, groupBy: Seq[String],
-      strKey: Seq[Boolean],
-      factSchema: org.apache.spark.sql.types.StructType, cols: Seq[String],
+      keyTypes: Seq[org.apache.spark.sql.types.DataType], cols: Seq[String],
       groups: Seq[(Seq[Any], Long, StatsPer)], from: String,
       scanned: Long): DataFrame = {
     import org.apache.spark.sql.{types => T}
     val rawSchema = T.StructType(
-      groupBy.zip(strKey).map { case (k, s) =>
+      groupBy.zip(keyTypes).map { case (k, dt) =>
         T.StructField(s"__k_$k",
-          if (s) T.StringType else T.DoubleType) } ++
+          if (dt == T.StringType) T.StringType else T.DoubleType) } ++
         (T.StructField("cnt", T.LongType, nullable = false) +:
           cols.flatMap(c => Seq(
             T.StructField(s"${c}_nn", T.LongType, nullable = false),
@@ -1945,10 +1893,68 @@ object Manifest {
     val df = spark.createDataFrame(
       new java.util.ArrayList(
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), rawSchema)
-    val outCols = groupBy.map(k =>
-      F.col(s"__k_$k").cast(factSchema(k).dataType).as(k)) ++
+    val outCols = groupBy.zip(keyTypes).map { case (k, dt) =>
+      F.col(s"__k_$k").cast(dt).as(k) } ++
       rawSchema.fieldNames.filterNot(_.startsWith("__k_")).map(F.col)
     df.select(outCols: _*)
+  }
+
+  /** 2⁵³: every integer below it is exactly a double. */
+  private val ExactDoubleCap = 9007199254740992d
+
+  private def integralType(dt: org.apache.spark.sql.types.DataType): Boolean =
+    dt match {
+      case org.apache.spark.sql.types.LongType |
+           org.apache.spark.sql.types.IntegerType |
+           org.apache.spark.sql.types.ShortType |
+           org.apache.spark.sql.types.ByteType => true
+      case _ => false
+    }
+
+  /** The 2⁵³ honesty guard of a metadata serve: integral sums and
+    * min/max fold through the sidecar's per-file DOUBLE scalars and
+    * cast back to integers, exact only while every partial stays below
+    * 2⁵³. Checked per served row (one per group) from the row's own
+    * scalars: a single-signed sum is exact iff |total| < 2⁵³ (every
+    * per-file sum and fold prefix is bounded by the total); mixed signs
+    * need the conservative nn·max(|min|,|max|) < 2⁵³ bound, since
+    * cancellation can hide an imprecise partial behind a small total;
+    * a min/max is exact iff |value| < 2⁵³ (snowflake ids are not).
+    * `measures` are (form, column) pairs over `schema`; only integral
+    * sum/min/max are guarded, and `rows` is evaluated only when one is
+    * present. Returns the first measure that could round, with the
+    * reason; None when the serve is exact. */
+  private[graft] def statsInexact(rows: => Seq[org.apache.spark.sql.Row],
+      measures: Seq[(String, String)],
+      schema: org.apache.spark.sql.types.StructType)
+      : Option[((String, String), String)] = {
+    val guarded = measures.filter { case (f, c) =>
+      Set("sum", "min", "max").contains(f) &&
+        integralType(schema(c).dataType) }
+    // per row, sums first, then the extrema (the refusal order)
+    val (sums, extrema) = guarded.partition(_._1 == "sum")
+    if (guarded.isEmpty) None
+    else rows.iterator.flatMap { row =>
+      def dbl(n: String): Option[Double] = {
+        val i = row.fieldIndex(n)
+        if (row.isNullAt(i)) None else Some(row.getDouble(i))
+      }
+      sums.iterator.filter { case (_, c) =>
+        (dbl(s"${c}_min"), dbl(s"${c}_max"), dbl(s"${c}_sum")) match {
+          case (Some(mi), Some(ma), Some(su)) =>
+            val nn = row.getAs[Long](s"${c}_nn")
+            if (mi >= 0 || ma <= 0) math.abs(su) >= ExactDoubleCap
+            else nn.toDouble * math.max(math.abs(mi), math.abs(ma)) >=
+              ExactDoubleCap
+          case _ => false // no non-null rows: sum is NULL, nothing to guard
+        }
+      }.map(_ -> ("exceeds 2^53 — the exact-looking integer would be " +
+        "silently wrong")) ++
+        extrema.iterator.filter { case (f, c) =>
+          dbl(s"${c}_$f").exists(v => math.abs(v) >= ExactDoubleCap)
+        }.map(_ -> ("|value| >= 2^53 — the exact-looking integer would " +
+          "be silently rounded"))
+    }.nextOption()
   }
 
   /** POINT takedown: delete the rows whose `column` is one of
@@ -3128,7 +3134,7 @@ object Manifest {
     *
     * Besides the envelope, the same single pass records per-file
     * `cnt` (rows), `nn` (non-null) and `sum` per column — the
-    * mergeable scalars [[statsAggregate]] needs to answer whole-table
+    * mergeable scalars [[statsAggregateGrouped]] needs to answer
     * count/min/max/sum from driver metadata. All doubles: counts and
     * integral-valued sums are exact below 2⁵³, the envelope
     * discipline already in force. A pre-widening sidecar (min/max
@@ -3730,7 +3736,7 @@ object Manifest {
     val strSide = newestSidecar(spark, table, snap, strStatsDir)
     if (numSide.isEmpty && strSide.isEmpty) return None
     // the file universe comes from the FILESYSTEM, not a relation init
-    // (the statsAggregate lesson: at 5k files the relation's footer
+    // (as in [[statsAggregateGrouped]]: at 5k files the relation's footer
     // pass costs seconds; the decision must stay a metadata read)
     val allFiles = listSnapshotFiles(spark, table, snap)
     if (allFiles.exists(f => f.split('/').exists(_.contains("="))))
@@ -3990,7 +3996,7 @@ object Manifest {
     * footer. None when any file is uncovered. */
   private[graft] def sidecarRawRowCount(spark: SparkSession, table: String,
       snap: Snapshot, files: Seq[String]): Option[Long] =
-    statsSidecarFor(spark, table, snap).flatMap {
+    newestSidecar(spark, table, snap, statsDir).flatMap {
       case (sch, rows) =>
         sch.fieldNames.find(_.endsWith("__cnt")).flatMap { cf =>
           val fi = sch.fieldIndex("file")
@@ -4041,107 +4047,18 @@ object Manifest {
     commit(spark, table, snap.version, keep, withOp(snap.meta, op))
   }
 
-  /** Whole-table `count(*)` / `count(c)` / `min` / `max` / `sum`
-    * answered from DRIVER METADATA — the [[analyzeFiles]] sidecar's
-    * per-file scalars folded at the driver — instead of a table scan:
-    * at 100 TB a `count(*)` becomes one sidecar parquet read (#files
-    * rows) and zero data-file opens. The Iceberg/Delta
-    * scan-planning-answers-aggregates trade, with the same soundness
-    * ladder as every sidecar consumer:
-    *
-    *  - files the sidecar does not cover (appended since the last
-    *    ANALYZE) are scanned — ALONE — and merged, so serving cost is
-    *    ∝ unanalyzed data, never the table (`served_from =
-    *    "stats_delta"`, `files_scanned` = that count);
-    *  - a snapshot carrying MoR delete vectors falls back to the live
-    *    scan (raw-file stats count masked rows; correcting min/max
-    *    from a positional mask is impossible without reading) — fold
-    *    the vectors and re-analyze to restore metadata serving;
-    *  - no sidecar / a sidecar predating a requested column or this
-    *    stat vintage / a hive layout with uncovered files (leaf-file
-    *    reads would drop partition columns) — full scan, never a
-    *    wrong answer.
-    *
-    * Returns ONE row: `cnt`, then per column `<c>_nn/_min/_max/_sum`
-    * (SQL semantics — all-NULL ⇒ NULL min/max/sum), then the
-    * `served_from` ∈ {stats, stats_delta, scan} and `files_scanned`
-    * pins that make the serving mode itself verifiable. Metadata-served
-    * results materialize as a LocalRelation — no data-file IO in the
-    * plan at all. Doubles are exact below 2⁵³ (counts, integral-valued
-    * sums) — the envelope discipline.
-    *
-    * `version` pins the serve to a RETAINED snapshot: data files are
-    * immutable, so ANY retained sidecar's rows, filtered to the files
-    * that snapshot actually lists, describe it exactly — "how big was
-    * release v3" is a metadata read years later. */
-  def statsAggregate(spark: SparkSession, table: String,
-      cols: Seq[String], version: Option[Long] = None): DataFrame = {
-    // empty cols is the count(*)-only shape: any covered column's
-    // per-file cnt anchors the row count
-    val snap = resolveSnapshot(spark, table, version, "statsAggregate")
-    def fallback(): DataFrame = {
-      val (cnt, per) = statsScanAgg(readSnapshotData(spark, table, snap),
-        cols, None)
-      statsEmit(spark, cols, cnt, per, "scan",
-        listSnapshotFiles(spark, table, snap).size.toLong)
-    }
-    if (snap.meta.contains(DvKey)) return fallback()
-    // mapped snapshots: sidecar stat names are PHYSICAL (built over
-    // the files), the caller speaks logical — look up physically, emit
-    // logically; a sidecar built BEFORE a rename keeps serving after
-    val colsP = cols.map(physOf(snap))
-    val (sch, rows) = statsSidecarFor(spark, table, snap)
-      .getOrElse(return fallback())
-    if (!statsCovers(sch, colsP)) return fallback()
-    val fi = sch.fieldIndex("file")
-    // a DRIVER filesystem listing, not a relation init — the serve
-    // must stay a metadata read even at 100k files. Set lookups keyed
-    // by normalized URI path (the listing and input_file_name render
-    // the scheme differently); the row filter is per sidecar row — a
-    // Seq.contains would be O(F²)
-    val allFiles = listSnapshotFiles(spark, table, snap)
-    val allSet = allFiles.map(normPath).toSet
-    val covered = rows.filter(r => allSet.contains(normPath(r.getString(fi))))
-    val uncovered = {
-      val known = covered.map(r => normPath(r.getString(fi))).toSet
-      allFiles.filterNot(f => known.contains(normPath(f)))
-    }
-    if (uncovered.nonEmpty && snap.meta.contains(PartitionKey))
-      return fallback()
-    val (dCnt, dPer) =
-      if (uncovered.isEmpty) (0L, statsZero(cols))
-      else statsScanAgg(
-        toLogicalProj(snap, readFilesLive(spark, table, snap, uncovered)),
-        cols, None)
-    val cntField = colsP.headOption.map(c => s"${c}__cnt")
-      .orElse(sch.fieldNames.find(_.endsWith("__cnt")))
-      .getOrElse(return fallback())
-    val (cnt, per) = statsFold(sch, covered, colsP, cntField, dCnt, dPer)
-    statsEmit(spark, cols, cnt, per,
-      if (uncovered.isEmpty) "stats" else "stats_delta",
-      uncovered.size.toLong)
-  }
-
-  // ---- shared statsAggregate/statsAggregateWhere machinery ----------
+  // ---- sidecar lookups of the stats serve ---------------------------
 
   private type StatsPer =
     Seq[(Long, Option[Double], Option[Double], Option[Double])]
 
-  /** Sidecar choice: the probed version's own sidecar when one was
-    * built, else the newest RETAINED one (the buildSidecar reuse rule)
-    * — rows are per immutable file, filtered by the caller to the
-    * files the probed snapshot actually lists, so a pre-append sidecar
-    * serves its covered files and the append becomes the scanned
-    * delta. */
-  private def statsSidecarFor(spark: SparkSession, table: String,
-      snap: Snapshot): Option[(org.apache.spark.sql.types.StructType,
-        Array[org.apache.spark.sql.Row])] =
-    newestSidecar(spark, table, snap, statsDir)
-
   /** The given FAMILY's sidecar at the snapshot's own version, else
-    * the newest retained one — sound for any per-file consumer
-    * because data files are immutable (rows describe covered files
-    * exactly; uncovered files degrade conservatively). */
+    * the newest retained one (the buildSidecar reuse rule) — sound for
+    * any per-file consumer because data files are immutable: rows,
+    * filtered by the caller to the files the snapshot lists, describe
+    * covered files exactly, so a pre-append sidecar serves its covered
+    * files and the append degrades conservatively (the stats serve
+    * scans it as the delta). */
   private def newestSidecar(spark: SparkSession, table: String,
       snap: Snapshot, dirFor: (String, Long) => Path)
       : Option[(org.apache.spark.sql.types.StructType,
@@ -4158,76 +4075,6 @@ object Manifest {
       cols: Seq[String]): Boolean =
     cols.flatMap(c => Seq(s"${c}__min", s"${c}__max", s"${c}__cnt",
       s"${c}__nn", s"${c}__sum")).forall(sch.fieldNames.contains)
-
-  private def statsZero(cols: Seq[String]): StatsPer =
-    cols.map(_ => (0L, Option.empty[Double],
-      Option.empty[Double], Option.empty[Double]))
-
-  /** The scan shape every fallback (and every boundary/uncovered
-    * probe) uses — same names/types as the metadata-served row, with
-    * an optional predicate applied first. */
-  private def statsScanAgg(df: DataFrame, cols: Seq[String],
-      pred: Option[Column]): (Long, StatsPer) = {
-    val aggs = F.count(F.lit(1)).cast("long").as("cnt") +:
-      cols.flatMap(c => Seq(
-        F.count(F.col(c)).cast("long").as(s"${c}_nn"),
-        F.min(F.col(c)).cast("double").as(s"${c}_min"),
-        F.max(F.col(c)).cast("double").as(s"${c}_max"),
-        F.sum(F.col(c).cast("double")).as(s"${c}_sum")))
-    val src = pred.map(df.filter).getOrElse(df)
-    val r = src.agg(aggs.head, aggs.tail: _*).collect()(0)
-    def d(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
-    (r.getLong(0), cols.indices.map { k =>
-      val b = 1 + 4 * k
-      (r.getLong(b), d(b + 1), d(b + 2), d(b + 3))
-    })
-  }
-
-  /** Fold the SERVING sidecar rows with the scanned delta: cnt from
-    * `cntField`, per requested column nn-sum / min / max / sum. */
-  private def statsFold(sch: org.apache.spark.sql.types.StructType,
-      serving: Array[org.apache.spark.sql.Row], cols: Seq[String],
-      cntField: String, dCnt: Long, dPer: StatsPer): (Long, StatsPer) = {
-    def fold(name: String, delta: Option[Double],
-        combine: (Double, Double) => Double): Option[Double] = {
-      val i = sch.fieldIndex(name)
-      val xs = serving.iterator.filter(!_.isNullAt(i))
-        .map(_.getDouble(i)) ++ delta.iterator
-      xs.reduceOption(combine)
-    }
-    val cnt = dCnt + {
-      val i = sch.fieldIndex(cntField)
-      serving.iterator.map(_.getDouble(i).toLong).sum
-    }
-    val per = cols.zip(dPer).map { case (c, (dnn, dmi, dma, dsu)) =>
-      val i = sch.fieldIndex(s"${c}__nn")
-      (dnn + serving.iterator.map(_.getDouble(i).toLong).sum,
-        fold(s"${c}__min", dmi, math.min),
-        fold(s"${c}__max", dma, math.max),
-        fold(s"${c}__sum", dsu, _ + _))
-    }
-    (cnt, per)
-  }
-
-  /** The one-row LocalRelation every serve/fallback returns. */
-  private def statsEmit(spark: SparkSession, cols: Seq[String], cnt: Long,
-      per: StatsPer, from: String, scanned: Long): DataFrame = {
-    import org.apache.spark.sql.{types => T}
-    val outSchema = T.StructType(
-      T.StructField("cnt", T.LongType, nullable = false) +:
-        cols.flatMap(c => Seq(
-          T.StructField(s"${c}_nn", T.LongType, nullable = false),
-          T.StructField(s"${c}_min", T.DoubleType),
-          T.StructField(s"${c}_max", T.DoubleType),
-          T.StructField(s"${c}_sum", T.DoubleType))) :+
-        T.StructField("served_from", T.StringType, nullable = false) :+
-        T.StructField("files_scanned", T.LongType, nullable = false))
-    val vals: Seq[Any] = cnt +: per.flatMap { case (nn, mi, ma, su) =>
-      Seq[Any](nn, mi.orNull, ma.orNull, su.orNull) } :+ from :+ scanned
-    spark.createDataFrame(
-      java.util.Collections.singletonList(
-        org.apache.spark.sql.Row.fromSeq(vals)), outSchema)
-  }
 
   /** Total bytes of a snapshot's data (driver-side metadata listing). */
   // ---- tags: named immutable snapshot refs --------------------------
@@ -4709,7 +4556,7 @@ object Manifest {
       // fraction can't be measured without opening data files).
       val masked = dvRels.map(d =>
         footerRowCount(spark, new Path(s"$table/$d"))).sum
-      statsSidecarFor(spark, table, snap).foreach { case (sch, rows) =>
+      newestSidecar(spark, table, snap, statsDir).foreach { case (sch, rows) =>
         // any analyzed column's per-file `<c>__cnt` is the row count
         // (doubles, exact below 2⁵³ — the envelope discipline)
         val cntField = sch.fieldNames.find(_.endsWith("__cnt"))

@@ -57,8 +57,8 @@ import org.apache.spark.sql.{functions => F}
   * .SupportsPushDownAggregates]], complete-only): `count(*)`/`count`/
   * `min`/`max`/`sum` — flat, under exact inclusive ranges, or GROUP BY
   * file-constant keys — serve from the envelope sidecars with ZERO
-  * data files in the plan ([[Manifest.statsAggregateGrouped]] and
-  * friends, version-pinned at push time); `avg` rides Spark's own
+  * data files in the plan (one [[Manifest.statsAggregateGrouped]]
+  * call, version-pinned at push time); `avg` rides Spark's own
   * sum/count rewrite; a bare `count(*)` serves even on DV-carrying
   * snapshots (sidecar rows minus masked positions). Anything
   * unservable — boundary files, 2⁵³-risky integral sums/extrema,
@@ -669,12 +669,13 @@ private[v2] class GraftScanBuilder(path: String, pinned: Option[Long],
   /** COMPLETE aggregate pushdown — `SELECT count(*)/min/max/sum …
     * [WHERE exact ranges] [GROUP BY file-constant keys]` over the
     * catalog serves from the envelope sidecars, zero data files
-    * opened (Manifest.statsAggregate / statsAggregateWhere /
-    * statsAggregateGrouped, version-pinned at push time). The serve
+    * opened (one Manifest.statsAggregateGrouped call for every shape,
+    * version-pinned at push time). The serve
     * runs EAGERLY here: it is driver metadata by the acceptance
     * conditions (refuse unless `served_from == "stats"`, i.e. the
     * sidecar covers every file and no boundary scans), and eager
-    * evaluation is also where the 2⁵³ honesty guard runs — a sum or
+    * evaluation is also where the 2⁵³ honesty guard
+    * (Manifest.statsInexact) runs — a sum or
     * min/max whose double scalar could round refuses PUSHDOWN (Spark
     * then aggregates the ordinary scan; slower, never wrong).
     * Partial pushdown is never offered (the serve is global, not
@@ -720,7 +721,7 @@ private[v2] class GraftScanBuilder(path: String, pinned: Option[Long],
       case _: DecimalType => true
       case _: NumericType | StringType => false
       case _ => true })) return None
-    // aggregates: the statsAggregate forms only, no DISTINCT
+    // aggregates: the forms the stats serve folds, no DISTINCT
     sealed trait Form
     case object Cnt extends Form
     case class Col(form: String, c: String) extends Form
@@ -791,47 +792,16 @@ private[v2] class GraftScanBuilder(path: String, pinned: Option[Long],
     // this scan must agree whatever commits land in between
     val version = pinned.orElse(
       Manifest.currentSnapshot(spark, path).map(_.version))
-    val served =
-      if (groupKeys.nonEmpty)
-        Manifest.statsAggregateGrouped(spark, path, groupKeys, cols,
-          whereBounds, version)
-      else if (whereBounds.isEmpty)
-        Manifest.statsAggregate(spark, path, cols, version)
-      else Manifest.statsAggregateWhere(spark, path, cols, whereBounds,
-        version)
-    val rows = served.collect().toIndexedSeq
+    val rows = Manifest.statsAggregateGrouped(spark, path, groupKeys, cols,
+      whereBounds, version).collect().toIndexedSeq
     // pure metadata only: a serve that had to open data files is not
     // worth claiming (Spark's own aggregate over the scan is the
     // honest plan there)
     if (!rows.forall(_.getAs[String]("served_from") == "stats")) return None
-    // the 2^53 honesty guards, per row (per group when grouped)
-    val exactCap = 9007199254740992d
-    def integral(c: String) = tableSchema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    rows.foreach { row =>
-      def dbl(n: String): Option[Double] = {
-        val i = row.fieldIndex(n)
-        if (row.isNullAt(i)) None else Some(row.getDouble(i))
-      }
-      forms.foreach {
-        case Col("sum", c) if integral(c) =>
-          (dbl(s"${c}_min"), dbl(s"${c}_max"), dbl(s"${c}_sum")) match {
-            case (Some(mi), Some(ma), Some(su)) =>
-              val nn = row.getAs[Long](s"${c}_nn")
-              val exact =
-                if (mi >= 0 || ma <= 0) math.abs(su) < exactCap
-                else nn.toDouble * math.max(math.abs(mi), math.abs(ma)) < exactCap
-              if (!exact) return None
-            case _ => ()
-          }
-        case Col(f @ ("min" | "max"), c) if integral(c) =>
-          dbl(s"${c}_$f").foreach(v =>
-            if (math.abs(v) >= exactCap) return None)
-        case _ => ()
-      }
-    }
+    // the 2^53 honesty guard, per row (per group when grouped)
+    if (Manifest.statsInexact(rows,
+        forms.collect { case Col(f, c) => (f, c) }, tableSchema).nonEmpty)
+      return None
     // output: group keys under their table types, then one field per
     // aggregate with the type Spark's own aggregate would produce
     def sumType(c: String): DataType = tableSchema(c).dataType match {

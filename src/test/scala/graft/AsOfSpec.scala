@@ -160,10 +160,21 @@ class AsOfSpec extends AnyFunSuite {
     import spark.implicits._
     val l = Seq((1L, 10L)).toDF("k", "ts")
     val r = Seq((1L, 5L, "a")).toDF("k", "ts", "v")
-    (1 to 2).foreach { _ =>
-      AsOfJoin.dataframe(spark, l, r, Seq("k"), "ts", "ts", Seq("v" -> "v"))
-      graft.functions.GraftFunctions.register(spark)
-    }
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    def entries() = (
+      spark.sessionState.functionRegistry
+        .lookupFunction(FunctionIdentifier("simhash64")).get,
+      spark.sessionState.tableFunctionRegistry
+        .lookupFunction(FunctionIdentifier("table_history")).get)
+    AsOfJoin.dataframe(spark, l, r, Seq("k"), "ts", "ts", Seq("v" -> "v"))
+    graft.functions.GraftFunctions.register(spark)
+    val (scalar1, table1) = entries()
+    AsOfJoin.dataframe(spark, l, r, Seq("k"), "ts", "ts", Seq("v" -> "v"))
+    graft.functions.GraftFunctions.register(spark)
+    // a repeat call registers nothing: the same entries, no replace
+    val (scalar2, table2) = entries()
+    assert(scalar2 eq scalar1)
+    assert(table2 eq table1)
     assert(spark.experimental.extraStrategies.count(_ == AsOfStrategy) == 1)
     assert(spark.experimental.extraOptimizations.count(_ == AsOfPushdownRule) == 1)
     assert(!spark.sql("SELECT simhash64(split('a b c', ' '))").head().isNullAt(0))

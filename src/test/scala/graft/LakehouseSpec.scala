@@ -2000,6 +2000,114 @@ class LakehouseSpec extends AnyFunSuite {
       org.apache.spark.sql.Row(4L, 1000L))
   }
 
+  test("one metadata serve: the flat and filtered forms are the grouped " +
+      "serve with no keys — count(*) serves from stats, an all-disjoint " +
+      "range is one cnt-0 row, a hive layout's range serves from stats") {
+    import graft.sources.Manifest
+    import spark.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("manifest_onestats").toString
+    val tbl = s"$dir/t"
+    Manifest.create(spark, tbl,
+      Seq((1L, 10L), (2L, 20L)).toDF("id", "v").coalesce(1))
+    Manifest.commitAppend(spark, tbl,
+      Seq((3L, 30L)).toDF("id", "v").coalesce(1))
+    Manifest.analyzeFiles(spark, tbl, Seq("v"))
+    // count(*) only: the per-file counts come from the sidecar
+    val c = Manifest.statsAggregate(spark, tbl, Nil).collect()
+    assert(c.length == 1)
+    assert(c.head.schema.fieldNames.toSeq ==
+      Seq("cnt", "served_from", "files_scanned"))
+    assert(c.head.getAs[String]("served_from") == "stats" &&
+      c.head.getAs[Long]("files_scanned") == 0L &&
+      c.head.getAs[Long]("cnt") == 3L)
+    // every file disjoint: still exactly one row, cnt 0, NULL scalars
+    val z = Manifest.statsAggregateWhere(spark, tbl, Seq("v"),
+      Seq(("v", 100.0, 200.0))).collect()
+    assert(z.length == 1)
+    val zr = z.head
+    assert(zr.getAs[Long]("cnt") == 0L && zr.getAs[Long]("v_nn") == 0L)
+    assert(Seq("v_min", "v_max", "v_sum").forall(n =>
+      zr.isNullAt(zr.fieldIndex(n))))
+    assert(zr.getAs[String]("served_from") == "stats" &&
+      zr.getAs[Long]("files_scanned") == 0L)
+    // a hive-partitioned snapshot: one file per day; a range that
+    // leaves every file disjoint or fully inside serves from stats
+    val hive = s"$dir/hive"
+    Manifest.create(spark, hive,
+      Seq((1L, 100L), (1L, 200L), (2L, 300L)).toDF("day", "v").coalesce(1),
+      partitionBy = Seq("day"))
+    Manifest.analyzeFiles(spark, hive, Seq("v"))
+    val h = Manifest.statsAggregateWhere(spark, hive, Seq("v"),
+      Seq(("v", 250.0, 400.0))).head()
+    assert(h.getAs[String]("served_from") == "stats" &&
+      h.getAs[Long]("files_scanned") == 0L)
+    assert(h.getAs[Long]("cnt") == 1L && h.getAs[Double]("v_sum") == 300.0)
+    // a boundary file on a hive layout: the full scan, still exact
+    val hb = Manifest.statsAggregateWhere(spark, hive, Seq("v"),
+      Seq(("v", 150.0, 400.0))).head()
+    assert(hb.getAs[String]("served_from") == "scan")
+    assert(hb.getAs[Long]("cnt") == 2L && hb.getAs[Double]("v_sum") == 500.0)
+  }
+
+  test("the 2^53 guard at both front doors: statsOnly refuses an " +
+      "integral sum or max that could round, and the SQL pushdown " +
+      "declines it so Spark's scan returns the exact value") {
+    import graft.sources.Manifest
+    import graft.sources.v2.GraftScanInfo
+    import graft.model.{Cube, CubeQueryException, Metric}
+    import graft.query.CubeQuery
+    import graft.compile.Compiler
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("manifest_2p53")
+      .toString
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.v2.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft.root", root)
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val tbl = s"$root/db/big"
+    val half = 1L << 52
+    // two files, each exact as a double; their sum crosses 2^53
+    Manifest.create(spark, tbl,
+      Seq((1L, half + 1)).toDF("id", "v").coalesce(1))
+    Manifest.commitAppend(spark, tbl,
+      Seq((2L, half + 3)).toDF("id", "v").coalesce(1))
+    Manifest.analyzeFiles(spark, tbl, Seq("v"))
+    val cube = Cube("big", Manifest.read(spark, tbl),
+      dimensions = Map.empty,
+      metrics = Map("sv" -> Metric.sumOf("sv", col("v")),
+        "mx" -> Metric.maxOf("mx", col("v"))),
+      selectors = Map.empty,
+      manifestTable = Some(tbl))
+    def statsOnly(m: String) =
+      Compiler.compile(CubeQuery(cube).measure(m, m).statsOnly)
+    val es = intercept[CubeQueryException](statsOnly("sv"))
+    assert(es.getMessage.contains("exceeds 2^53"), es.getMessage)
+    // the max is still exact: the guard refuses only what could round
+    assert(statsOnly("mx").head().getLong(0) == half + 3)
+    // SQL: a count(*) pushes down (zero files), the sum declines
+    assert(spark.sql("SELECT count(*) FROM graft.db.big").head()
+      .getLong(0) == 2L)
+    assert(GraftScanInfo.lastFiles(tbl).exists(_.isEmpty))
+    assert(spark.sql("SELECT sum(v) FROM graft.db.big").head()
+      .getLong(0) == 2 * half + 4)
+    assert(GraftScanInfo.lastFiles(tbl).exists(_.nonEmpty),
+      "a sum past 2^53 must decline the pushdown and scan")
+    // a row past 2^53: its max would round
+    val past = (1L << 53) + 1
+    Manifest.commitAppend(spark, tbl,
+      Seq((3L, past)).toDF("id", "v").coalesce(1))
+    Manifest.analyzeFiles(spark, tbl, Seq("v"))
+    val em = intercept[CubeQueryException](statsOnly("mx"))
+    assert(em.getMessage.contains("silently rounded"), em.getMessage)
+    assert(spark.sql("SELECT count(*) FROM graft.db.big").head()
+      .getLong(0) == 3L)
+    assert(GraftScanInfo.lastFiles(tbl).exists(_.isEmpty))
+    assert(spark.sql("SELECT max(v) FROM graft.db.big").head()
+      .getLong(0) == past)
+    assert(GraftScanInfo.lastFiles(tbl).exists(_.nonEmpty),
+      "a max past 2^53 must decline the pushdown and scan")
+  }
+
   test("statsOnly front door: the metadata-served result is " +
       "indistinguishable from the scan — same schema, same values — " +
       "and its plan reads zero data files") {

@@ -1,11 +1,15 @@
 #!/usr/bin/env python3
 """Local correctness loop mimicking the driver's DuckDB-oracle compare.
 
-Usage: python3 tools/compare.py <sfdir> <verify_out_dir>
+Usage: python3 tools/compare.py <sfdir> <verify_out_dir> [<base_out_dir>]
 
 Reads each <out>/<name>/ parquet (Spark output), runs the matching oracle
 SQL from <out>/oracle_sql.json in DuckDB over the same sf parquet tables,
 canonicalizes (sort columns by name, sort rows, round floats), and diffs.
+
+With <base_out_dir> (another build's graft.Verify output, e.g. the parent
+commit's), it also checks that every query's rows are identical to that
+build's: same columns, same sorted rows, floats compared exactly.
 """
 import json, math, sys, glob, os
 import duckdb
@@ -13,8 +17,9 @@ import duckdb
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-def canon(rows, cols):
-    # sort columns by name; stringify values with float rounding; sort rows
+def canon(rows, cols, exact=False):
+    # sort columns by name; stringify values with float rounding (full
+    # repr when exact); sort rows
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = []
     for r in rows:
@@ -25,7 +30,7 @@ def canon(rows, cols):
                 if math.isnan(v):
                     vals.append("nan")
                 else:
-                    vals.append(f"{v:.6g}")
+                    vals.append(repr(v) if exact else f"{v:.6g}")
             elif isinstance(v, list):
                 vals.append(json.dumps(v, default=str, sort_keys=True))
             elif isinstance(v, dict):
@@ -35,7 +40,29 @@ def canon(rows, cols):
         out.append(tuple(vals))
     return sorted(out), [cols[i] for i in order]
 
-def main(sfdir, outdir):
+def read_rows(con, outdir, name):
+    files = glob.glob(f"{outdir}/{name}/*.parquet")
+    if not files:
+        return None
+    got = con.sql(f"SELECT * FROM read_parquet({files!r})")
+    return got.columns, got.fetchall()
+
+def same_as_base(con, outdir, basedir, names):
+    """Row identity against another build's output; returns #differing."""
+    n_same = n_diff = 0
+    for name in names:
+        a, b = read_rows(con, outdir, name), read_rows(con, basedir, name)
+        if a is None or b is None:
+            print(f"MISSING {name} (here: {a is not None}, base: {b is not None})")
+            n_diff += 1
+        elif canon(a[1], a[0], exact=True) != canon(b[1], b[0], exact=True):
+            print(f"DIFFERS {name} from base"); n_diff += 1
+        else:
+            n_same += 1
+    print(f"{n_same} identical to base, {n_diff} differ")
+    return n_diff
+
+def main(sfdir, outdir, basedir=None):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
@@ -92,7 +119,8 @@ def main(sfdir, outdir):
         else:
             print(f"OK     {name} ({len(gC)} rows)"); n_pass += 1
     print(f"\n{n_pass} ok, {n_fail} fail, {n_skip} rows-only of {len(names)}")
-    return 1 if n_fail else 0
+    n_diff = same_as_base(con, outdir, basedir, names) if basedir else 0
+    return 1 if n_fail or n_diff else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(*sys.argv[1:4]))
