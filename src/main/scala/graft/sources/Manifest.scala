@@ -77,16 +77,14 @@ object Manifest {
     * partition inference see the non-partition `_v*` level between the
     * common base and the `col=` dirs and refuse
     * (CONFLICTING_DIRECTORY_STRUCTURES). Filters still push into every
-    * union branch, so partition pruning survives. Single-entry or
-    * unpartitioned snapshots keep the one-relation fast path (one file
-    * index, one pushdown). */
+    * union branch, so partition pruning survives. Every other snapshot
+    * is ONE relation over its entries ([[readPaths]]). */
   private def readSnapshotRaw(spark: SparkSession, table: String,
       snap: Snapshot): DataFrame = {
     val paths = snap.paths.map(p => s"$table/$p")
-    val reader = snapshotReader(spark, snap)
-    if (snap.paths.size <= 1 || !snap.meta.contains(PartitionKey))
-      reader.parquet(paths: _*)
-    else paths.map(reader.parquet(_)).reduce(_ unionByName _)
+    if (!snap.meta.contains(PartitionKey)) readPaths(spark, snap, paths)
+    else if (snap.paths.size <= 1) spark.read.parquet(paths: _*)
+    else paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
   }
 
   /** [[readSnapshotRaw]] with the snapshot's delete vectors applied —
@@ -107,11 +105,8 @@ object Manifest {
       readSnapshotRaw(spark, table, snap)
     else if (snap.paths.size <= 1 || !snap.meta.contains(PartitionKey))
       applyDv(spark, table, snap, readSnapshotRaw(spark, table, snap))
-    else {
-      val reader = snapshotReader(spark, snap)
-      snap.paths.map(p => applyDv(spark, table, snap,
-        reader.parquet(s"$table/$p"))).reduce(_ unionByName _)
-    }
+    else snap.paths.map(p => applyDv(spark, table, snap,
+      spark.read.parquet(s"$table/$p"))).reduce(_ unionByName _)
 
   /** The snapshot's delete-vector frame — `(file, pos)` rows naming
     * MoR-deleted positions by the data file's MANIFEST-RELATIVE path
@@ -122,7 +117,8 @@ object Manifest {
       snap: Snapshot): Option[DataFrame] =
     snap.meta.get(DvKey).map(_.split(',').toSeq.filter(_.nonEmpty))
       .filter(_.nonEmpty)
-      .map(dirs => spark.read.parquet(dirs.map(d => s"$table/$d"): _*))
+      .map(dirs => openListed(spark, dirs.map(d => s"$table/$d"),
+        footerRule(spark)))
 
   /** Distinct `file` keys of the given DV directories — read AT THE
     * DRIVER when the vectors are small (they are takedown-sized by the
@@ -132,7 +128,6 @@ object Manifest {
   private def dvDistinctFiles(spark: SparkSession, table: String,
       rels: Seq[String]): Set[String] = {
     val dirs = rels.map(d => s"$table/$d")
-    val df = spark.read.parquet(dirs: _*)
     val conf = spark.sessionState.newHadoopConf()
     val statuses = dirs.flatMap { d =>
       val p = new Path(d)
@@ -140,13 +135,14 @@ object Manifest {
     }
     (try {
       if (statuses.nonEmpty && statuses.map(_._2).sum <= (64L << 20)) {
-        val fi = df.schema.fieldIndex("file")
-        Some(driverReadParquetRows(spark, statuses, df.schema, conf)
+        val schema = footerSchema(spark, statuses.head._1)
+        val fi = schema.fieldIndex("file")
+        Some(driverReadParquetRows(spark, statuses, schema, conf)
           .map(_.getString(fi)).toSet)
       } else None
     } catch { case scala.util.control.NonFatal(_) => None })
-      .getOrElse(df.select("file").distinct().collect()
-        .map(_.getString(0)).toSet)
+      .getOrElse(openListed(spark, dirs, footerRule(spark))
+        .select("file").distinct().collect().map(_.getString(0)).toSet)
   }
 
   /** Manifest-relative file path + row index of every row, from the
@@ -185,29 +181,134 @@ object Manifest {
   /** Live rows of a SUBSET of the snapshot's files — the partial-read
     * shape every CoW rewrite and pruned read must use on a DV-carrying
     * snapshot (a raw subset read would resurrect MoR-deleted rows).
-    * Reads under the committed schema like every partial read. */
+    * Reads under the snapshot's schema like every partial read. */
   private def readFilesLive(spark: SparkSession, table: String,
       snap: Snapshot, files: Seq[String]): DataFrame =
-    applyDv(spark, table, snap,
-      snapshotReader(spark, snap).parquet(files: _*))
+    applyDv(spark, table, snap, readPaths(spark, snap, files))
 
-  /** The reader EVERY path that opens a snapshot's files — or any
-    * SUBSET of them — must use: an evolved snapshot reads under its
-    * COMMITTED schema ([[SchemaKey]]), so parquet serves the columns a
-    * pre-evolution file lacks as NULL. A raw spark.read.parquet over a
-    * mixed pre-/post-evolution file set would infer from ONE footer
-    * and nondeterministically drop the evolved columns — in the CoW
+  /** The read EVERY path that opens a snapshot's entries — or any
+    * SUBSET of its files — must use: one relation under
+    * [[readSchemaAt]]'s schema for what it lists ([[openListed]]), so
+    * an evolved snapshot reads under its COMMITTED schema
+    * ([[SchemaKey]]) and parquet serves the columns a pre-evolution
+    * file lacks as NULL (a raw spark.read.parquet over a mixed
+    * pre-/post-evolution file set would infer from ONE footer and
+    * nondeterministically drop the evolved columns — in the CoW
     * rewrite that is silent data loss, in a pruned read a resolution
-    * error. */
-  private def snapshotReader(spark: SparkSession, snap: Snapshot)
-      : org.apache.spark.sql.DataFrameReader =
-    snap.meta.get(SchemaKey) match {
-      case Some(json) if !snap.meta.contains(PartitionKey) =>
-        spark.read.schema(
-          org.apache.spark.sql.types.DataType.fromJson(json)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case _ => spark.read
+    * error), and an unstamped one reads under its first file's footer,
+    * resolved at the driver instead of by Spark's one-job inference.
+    * Hive layouts keep Spark's own relation: their partition columns
+    * come from directory inference. */
+  private def readPaths(spark: SparkSession, snap: Snapshot,
+      paths: Seq[String]): DataFrame =
+    openListed(spark, paths, readSchemaAt(spark, snap, _))
+
+  /** THE read schema of a snapshot's own files, resolved AT THE DRIVER
+    * with no Spark job: the committed stamp ([[SchemaKey]]) when the
+    * snapshot carries one; else the footer of the first of `files` (the
+    * caller's listing of what it reads), converted as Spark's schema
+    * inference converts it ([[footerRule]]). Unstamped entries share
+    * one read schema (the [[commitAppend]] contract), so one footer
+    * speaks for all of them — the file Spark's own inference would
+    * have opened. None for a hive layout (recorded partitioning, or
+    * `k=v` directories under an unstamped snapshot): its partition
+    * columns come from directory inference, which only the relation
+    * path does. Nullable throughout, as every parquet relation is. */
+  private[graft] def readSchemaAt(spark: SparkSession, snap: Snapshot,
+      files: Seq[String]): Option[org.apache.spark.sql.types.StructType] =
+    if (snap.meta.contains(PartitionKey)) None
+    else committedSchemaOf(snap).map(nullableAll).orElse(footerRule(spark)(files))
+
+  /** [[readSchemaAt]] for callers that need a schema for every layout:
+    * a hive layout's comes from its relation (directory inference,
+    * today's one-job path), everything else from the driver. */
+  private[graft] def readSchema(spark: SparkSession, table: String,
+      snap: Snapshot, files: Seq[String]): org.apache.spark.sql.types.StructType =
+    readSchemaAt(spark, snap, files)
+      .getOrElse(readSnapshotRaw(spark, table, snap).schema)
+
+  /** The footer half of the schema rule, for parquet files with no
+    * committed stamp (unstamped entries, delete vectors, sidecars,
+    * freshly written data): the first file's footer, or None when
+    * there is no file or a `k=v` directory asks for partition
+    * inference. */
+  private def footerRule(spark: SparkSession)(files: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    if (files.exists(f => f.split('/').exists(_.contains("=")))) None
+    else files.headOption.map(footerSchema(spark, _))
+
+  /** One parquet footer's schema, read at the driver and converted the
+    * way Spark's inference converts the footer it picks: Spark's
+    * row-metadata schema when the writer stored one, else the parquet
+    * types under the session's binaryAsString / INT96 / NTZ settings. */
+  private def footerSchema(spark: SparkSession, file: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val p = new Path(file)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
+        spark.sessionState.newHadoopConf()))
+    val footer = try r.getFooter finally r.close()
+    nullableAll(ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(p, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+  }
+
+  /** Every field, element and value nullable — the form a parquet
+    * relation reports its data schema in, whatever the files say. */
+  private def nullableAll(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+    def go(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = go(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(go(a.elementType), containsNull = true)
+      case m: MapType =>
+        MapType(go(m.keyType), go(m.valueType), valueContainsNull = true)
+      case o => o
     }
+    go(s).asInstanceOf[StructType]
+  }
+
+  /** ONE parquet frame over `roots` (absolute files or directories):
+    * the roots are listed once at the driver and `schemaOf` resolves
+    * the schema from that listing. With a schema, the relation's file
+    * index is SEEDED with the same listing, so Spark neither lists the
+    * roots again (no listing job past its 32-root parallel threshold)
+    * nor warns that every root is an underscore `_v…` directory; the
+    * partition and data schemas split as Spark's own relation splits
+    * them. No schema (hive), or a root missing on disk, keeps Spark's
+    * own relation path and its errors. */
+  private def openListed(spark: SparkSession, roots: Seq[String],
+      schemaOf: Seq[String] => Option[org.apache.spark.sql.types.StructType])
+      : DataFrame = {
+    val entries = listRoots(spark, roots)
+    schemaOf(entries.flatMap(_.files)) match {
+      case Some(schema) if roots.nonEmpty && entries.size == roots.size =>
+        import org.apache.hadoop.fs.FileStatus
+        import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+        import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+        // the index asks for each root's leaves; it gets the listing
+        // above and lists nothing itself (no state outlives this read)
+        val leaves = entries.map(e =>
+          normPath(e.root.toString) -> e.leaves.toArray).toMap
+        val listing = new FileStatusCache {
+          override def getLeafFiles(p: Path) = leaves.get(normPath(p.toString))
+          def putLeafFiles(p: Path, l: Array[FileStatus]): Unit = ()
+          def invalidateAll(): Unit = ()
+        }
+        val index = new InMemoryFileIndex(spark, entries.map(_.root),
+          Map.empty, Some(schema), listing)
+        val parts = index.partitionSchema
+        val resolver = spark.sessionState.conf.resolver
+        val data = schema.filterNot(f => parts.exists(p => resolver(p.name, f.name)))
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, parts,
+          org.apache.spark.sql.types.StructType(data), None,
+          new ParquetFileFormat(), Map.empty)(spark))
+      case Some(schema) => spark.read.schema(schema).parquet(roots: _*)
+      case None => spark.read.parquet(roots: _*)
+    }
+  }
 
   /** rel-path → owning manifest entry. Entries within one snapshot are
     * disjoint (none nests inside another), so the owner is either the
@@ -1020,26 +1121,27 @@ object Manifest {
     // Types compare only outside partitionBy columns (hive partition
     // inference narrows their types on read).
     //
-    // ONE-entry probe, not a full-snapshot relation: the schema/layout
+    // ONE-entry probe, not a full-snapshot listing: the schema/layout
     // check must stay O(entry) — a 10⁶-entry table's append (and every
     // auto-rebase attempt under contention) would otherwise pay a full
     // file listing just to compare schemas. Entries share one read
-    // schema by this very contract; the committed stamp wins when
-    // present (evolved tables), and hive entries are whole version
-    // DIRECTORIES (the deleteWhere carry rule), so partition inference
-    // still sees the `col=` level under the probe.
-    lazy val probeDf =
-      snapshotReader(spark, snap).parquet(s"$table/${snap.paths.head}")
+    // schema by this very contract, so [[readSchema]] over the first
+    // entry speaks for the table: the committed stamp when present
+    // (evolved tables), else its first footer; hive entries are whole
+    // version DIRECTORIES (the deleteWhere carry rule), so partition
+    // inference still sees the `col=` level under the probe.
+    lazy val probeSnap = snap.copy(paths = snap.paths.take(1))
+    lazy val probeFiles = listSnapshotFiles(spark, table, probeSnap)
+    lazy val probeSchema = readSchema(spark, table, probeSnap, probeFiles)
     // a MAPPED snapshot's batch contract is the LOGICAL schema (the
     // caller speaks logical names); the batch is renamed to physical
     // just before the write, so files stay physically uniform
     val pairsOpt = mappingOf(snap)
     val curS = pairsOpt match {
-      case None => committedSchemaOf(snap).getOrElse(probeDf.schema)
+      case None => probeSchema
       case Some(pairs) =>
-        val phys = committedSchemaOf(snap).getOrElse(probeDf.schema)
         org.apache.spark.sql.types.StructType(pairs.map { case (l, p) =>
-          val f = phys(p)
+          val f = probeSchema(p)
           org.apache.spark.sql.types.StructField(l, f.dataType, f.nullable)
         })
     }
@@ -1060,7 +1162,7 @@ object Manifest {
       // and brick every later read on the strict unionByName
       val hiveLayout = snap.meta.contains(PartitionKey) ||
         snap.paths.exists(p => p.split('/').exists(_.contains("="))) ||
-        probeDf.inputFiles.exists(f => f.split('/').exists(_.contains("=")))
+        probeFiles.exists(f => f.split('/').exists(_.contains("=")))
       require(partitionBy.isEmpty && !hiveLayout,
         "Manifest.commitAppend: additive schema evolution is not " +
           "supported on hive-partitioned tables (explicit-schema reads " +
@@ -1595,33 +1697,22 @@ object Manifest {
       version: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.types.{DataType, StringType}
     val snap = resolveSnapshot(spark, table, version, "statsAggregateGrouped")
+    val allFiles = listSnapshotFiles(spark, table, snap)
     // key types WITHOUT a full relation init (at 5k files its footer
-    // pass costs seconds): the committed-schema stamp when present,
-    // else one footer; hive layouts keep the relation read (a leaf
-    // footer lacks the partition columns, whose types come from
+    // pass costs seconds): [[readSchema]] — the committed stamp or one
+    // footer, at the driver; hive layouts keep the relation read (a
+    // leaf footer lacks the partition columns, whose types come from
     // directory inference). An ungrouped serve needs no schema.
     val keyTypes: Seq[DataType] = if (groupBy.isEmpty) Nil else {
-      val factSchema: org.apache.spark.sql.types.StructType =
-        snap.meta.get(SchemaKey) match {
-          case Some(json) =>
-            val phys = org.apache.spark.sql.types.DataType.fromJson(json)
-              .asInstanceOf[org.apache.spark.sql.types.StructType]
-            // the caller speaks LOGICAL names on a mapped snapshot
-            mappingOf(snap) match {
-              case None => phys
-              case Some(pairs) => org.apache.spark.sql.types.StructType(
-                pairs.map { case (l, ph) =>
-                  val f = phys(ph)
-                  org.apache.spark.sql.types.StructField(l, f.dataType,
-                    f.nullable)
-                })
-            }
-          case None if !snap.meta.contains(PartitionKey) =>
-            listSnapshotFiles(spark, table, snap).headOption
-              .map(f => spark.read.parquet(f).schema)
-              .getOrElse(readSnapshotRaw(spark, table, snap).schema)
-          case None => readSnapshotRaw(spark, table, snap).schema
-        }
+      val phys = readSchema(spark, table, snap, allFiles)
+      // the caller speaks LOGICAL names on a mapped snapshot
+      val factSchema = mappingOf(snap) match {
+        case None => phys
+        case Some(pairs) => org.apache.spark.sql.types.StructType(
+          pairs.map { case (l, ph) =>
+            org.apache.spark.sql.types.StructField(l, phys(ph).dataType)
+          })
+      }
       groupBy.map { k =>
         require(factSchema.fieldNames.contains(k),
           s"Manifest.statsAggregateGrouped: '$k' is not a column of $table")
@@ -1631,7 +1722,6 @@ object Manifest {
     val strKey = keyTypes.map(_ == StringType)
     val predCol = where.map { case (c, lo, hi) =>
       F.col(c) >= lo && F.col(c) <= hi }.reduceOption(_ && _)
-    val allFiles = listSnapshotFiles(spark, table, snap)
     val partitioned = snap.meta.contains(PartitionKey)
     // hive PARTITION group keys serve from the file PATHS: each file's
     // directory value is constant by construction, so the key needs no
@@ -2011,7 +2101,7 @@ object Manifest {
       raw: DataFrame, files: Option[Seq[String]]): DataFrame = files match {
     case None => raw
     case Some(fl) if fl.isEmpty => raw.limit(0)
-    case Some(fl) => snapshotReader(spark, snap).parquet(fl: _*)
+    case Some(fl) => readPaths(spark, snap, fl)
   }
 
   /** The shared CoW takedown. `candidates` is the caller's file-skipping
@@ -2182,7 +2272,7 @@ object Manifest {
       source.select(full.columns.map(c =>
         F.col(c).as(physMap(c))).toIndexedSeq: _*), parts)
     if (nSrc == 0) return snap // empty source: no-op, nothing committed
-    val src = spark.read.parquet(s"$table/$srcRel")
+    val src = openListed(spark, Seq(s"$table/$srcRel"), footerRule(spark))
     // key hygiene + bloom probes in ONE pass over the frozen copy
     // (was two: a duplicate/NULL-key probe job, then a distinct-key
     // xxhash64 collect). One aggregation by key, bad-keys-first
@@ -2221,7 +2311,8 @@ object Manifest {
         val bloomName = compositeName(keysP)
         val hs = keyProbe.map(_.getLong(0)).toIndexedSeq
         if (hs.size <= probeCap) scanCandidates(spark, snap, raw,
-          pointCandidateFilesHashed(spark, table, snap, bloomName, hs))
+          pointCandidateFilesHashed(spark, table, snap,
+            listSnapshotFiles(spark, table, snap), bloomName, hs))
         else raw
       } else raw
     def norm(f: String) = new Path(f).toUri.getPath
@@ -2319,7 +2410,7 @@ object Manifest {
         val files = admittedFilesFor(spark, table, snap, pred)
           .getOrElse(raw.inputFiles.toIndexedSeq)
         if (files.isEmpty) return snap
-        selectWithPos(snapshotReader(spark, snap).parquet(files: _*))
+        selectWithPos(readPaths(spark, snap, files))
       }
     // exclude positions earlier DVs already mask
     val live = dvFrame(spark, table, snap) match {
@@ -2478,7 +2569,8 @@ object Manifest {
       // frame costs a footer/listing pass even when there is nothing
       // to enforce
       try enforceChecks(spark, snap,
-        toLogicalProj(snap, spark.read.parquet(s"$table/$insRel")),
+        toLogicalProj(snap,
+          openListed(spark, Seq(s"$table/$insRel"), footerRule(spark))),
         "applyDeltaMoR")
       catch { case e: Throwable =>
         fs.delete(new Path(s"$table/$insRel"), true); throw e
@@ -2515,9 +2607,9 @@ object Manifest {
               else raw.inputFiles.toIndexedSeq
             if (files.isEmpty)
               // bloom excluded every file: nothing can match
-              selectWithPos(snapshotReader(spark, snap)
-                .parquet(raw.inputFiles.head)).limit(0)
-            else selectWithPos(snapshotReader(spark, snap).parquet(files: _*))
+              selectWithPos(readPaths(spark, snap, raw.inputFiles.take(1)))
+                .limit(0)
+            else selectWithPos(readPaths(spark, snap, files))
           }
         val live = dvFrame(spark, table, snap) match {
           case None => posed
@@ -2799,7 +2891,8 @@ object Manifest {
     val fs = fsFor(spark, table)
     require(fs.exists(stageMarker(table, id)),
       s"Manifest.readStage: no staged batch $id on $table")
-    val raw = spark.read.parquet(s"$table/${stageDir(table, id)}")
+    val raw = openListed(spark, Seq(s"$table/${stageDir(table, id)}"),
+      footerRule(spark))
     // staged files are physical; the auditor reads under the CURRENT
     // snapshot's logical names (renames between stage and audit show
     // the new names — physical names are the stable identity; a
@@ -2836,7 +2929,7 @@ object Manifest {
     // Pairs whose physical column the staged batch lacks (a column
     // ADDED since staging) are left out of the projection so the
     // schema re-check reports the drift instead of a resolution error
-    val rawStaged = spark.read.parquet(s"$table/$rel")
+    val rawStaged = openListed(spark, Seq(s"$table/$rel"), footerRule(spark))
     val staged = mappingOf(snap) match {
       case None => rawStaged
       case Some(pairs) =>
@@ -3029,14 +3122,6 @@ object Manifest {
   private def statsDir(table: String, v: Long) =
     new Path(s"$table/_manifest/stats_v${"%08d".format(v)}")
 
-  /** Sidecar read, degraded-not-failed: sidecars are an OPTIONAL
-    * accelerator, so any read race — a concurrent [[buildSidecar]]
-    * swap, a [[vacuum]] reclaiming the version — must collapse to
-    * "no sidecar" (conservative full read), never a reader error.
-    * The rows are pulled to the driver ONCE and handed to the pruning
-    * decision as raw rows (#files grain — the size every decision
-    * already collects); no re-wrapped relation, so a snapshot with
-    * large per-file Bloom sidecars holds ONE driver copy, not two. */
   /** Total row count of the parquet files under `dir`, from FOOTERS
     * only — no row is deserialized, so counting even a large delete
     * vector stays a driver metadata read (the mask-heavy advisor's
@@ -3053,29 +3138,42 @@ object Manifest {
     }.sum
   }
 
+  /** Sidecar read, degraded-not-failed: sidecars are an OPTIONAL
+    * accelerator, so any read race — a concurrent [[buildSidecar]]
+    * swap, a [[vacuum]] reclaiming the version — must collapse to
+    * "no sidecar" (conservative full read), never a reader error.
+    * The rows are pulled to the driver ONCE and handed to the pruning
+    * decision as raw rows (#files grain — the size every decision
+    * already collects); no re-wrapped relation, so a snapshot with
+    * large per-file Bloom sidecars holds ONE driver copy, not two.
+    * The schema is resolved at the driver too, from the first
+    * sidecar file's footer ([[footerSchema]]): a consult runs no
+    * Spark job at all. */
   private def sidecarRows(spark: SparkSession, dir: Path)
       : Option[(org.apache.spark.sql.types.StructType,
         Array[org.apache.spark.sql.Row])] =
     try {
-      val df = spark.read.parquet(dir.toString)
-      val schema = df.schema
       // sidecars are written coalesce(1) and are per-FILE metadata —
       // read them AT THE DRIVER (guide §5: metadata at the driver,
-      // jobs for data). The previous df.collect() launched a Spark
-      // job per consult — pure scheduling latency for a one-file
-      // read, paid by every envelope/bloom/stats decision. A sidecar
-      // that somehow grew past the cap, or any reader surprise, falls
-      // back to the distributed collect.
+      // jobs for data), schema from the footer and rows through the
+      // file format's own reader (the previous df.collect() launched
+      // a Spark job per consult, and the schema inference another). A
+      // sidecar that somehow grew past the cap, or any reader
+      // surprise, falls back to the distributed collect.
       val conf = spark.sessionState.newHadoopConf()
       val fs = dir.getFileSystem(conf)
       val files = walkParquetStatus(fs, dir)
-      val rows =
-        try {
-          if (files.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else if (files.map(_._2).sum > (64L << 20)) df.collect()
-          else driverReadParquetRows(spark, files, schema, conf)
-        } catch { case scala.util.control.NonFatal(_) => df.collect() }
-      Some((schema, rows))
+      if (files.isEmpty) None
+      else {
+        val schema = footerSchema(spark, files.head._1)
+        def collected = spark.read.schema(schema).parquet(dir.toString).collect()
+        val rows =
+          try {
+            if (files.map(_._2).sum > (64L << 20)) collected
+            else driverReadParquetRows(spark, files, schema, conf)
+          } catch { case scala.util.control.NonFatal(_) => collected }
+        Some((schema, rows))
+      }
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Rows of small parquet files read ON THE DRIVER through Spark's
@@ -3226,7 +3324,7 @@ object Manifest {
     val fresh =
       if (newFiles.isEmpty) reused.limit(0)
       else {
-        val nf = spark.read.parquet(newFiles: _*)
+        val nf = readPaths(spark, snap, newFiles)
         // hive-partitioned snapshots carry partition columns only when
         // read through their directories — a leaf-file read loses
         // them, so analyze such a column from the full snapshot scan
@@ -3382,10 +3480,11 @@ object Manifest {
   private def pointCandidateFiles(spark: SparkSession, table: String,
       snap: Snapshot, column: String,
       values: Seq[Any]): Option[Seq[String]] = {
-    val dt = readSnapshotRaw(spark, table, snap).schema(column).dataType
+    val all = listSnapshotFiles(spark, table, snap)
+    val dt = readSchema(spark, table, snap, all)(column).dataType
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     val probes = values.map(v => driverHash(Seq(v -> dt), tz))
-    pointCandidateFilesHashed(spark, table, snap, column, probes)
+    pointCandidateFilesHashed(spark, table, snap, all, column, probes)
   }
 
   /** [[pointCandidateFiles]] for composite keys: each probe row is one
@@ -3394,11 +3493,12 @@ object Manifest {
   private def pointCandidateFilesTuples(spark: SparkSession, table: String,
       snap: Snapshot, keys: Seq[String],
       rows: Seq[Seq[Any]]): Option[Seq[String]] = {
-    val sch = readSnapshotRaw(spark, table, snap).schema
+    val all = listSnapshotFiles(spark, table, snap)
+    val sch = readSchema(spark, table, snap, all)
     val dts = keys.map(k => sch(k).dataType)
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     val probes = rows.map(r => driverHash(r.zip(dts), tz))
-    pointCandidateFilesHashed(spark, table, snap,
+    pointCandidateFilesHashed(spark, table, snap, all,
       compositeName(keys), probes)
   }
 
@@ -3418,16 +3518,15 @@ object Manifest {
     XxHash64(children, 42L).eval(null).asInstanceOf[Long]
   }
 
-  /** The bloom decision core: candidate files whose `<bloomName>`
-    * filter might contain ANY of the pre-hashed probes. None ⇒ no
-    * sidecar / hive layout / the sidecar predates this (possibly
-    * composite) spec — the caller serves the full read. */
+  /** The bloom decision core: candidate files among `all` (the
+    * snapshot's OWN file list — from the filesystem, never a relation
+    * init at decision time) whose `<bloomName>` filter might contain
+    * ANY of the pre-hashed probes. None ⇒ no sidecar / hive layout /
+    * the sidecar predates this (possibly composite) spec — the caller
+    * serves the full read. */
   private def pointCandidateFilesHashed(spark: SparkSession, table: String,
-      snap: Snapshot, bloomName: String,
+      snap: Snapshot, all: Seq[String], bloomName: String,
       probes: Seq[Long]): Option[Seq[String]] = {
-    // the decision needs the snapshot's OWN file list — from the
-    // filesystem, never a relation init at decision time
-    val all = listSnapshotFiles(spark, table, snap)
     if (all.exists(f => f.split('/').exists(_.contains("="))))
       return None
     // newest retained sidecar (files are immutable; unknown files
@@ -3613,14 +3712,33 @@ object Manifest {
     * only needs NAMES. Matching against sidecar rows (written from
     * `input_file_name()`) must key by [[normPath]] — the two sources
     * render the scheme differently (`file:///x` vs `file:/x`). */
-  private def listSnapshotFiles(spark: SparkSession, table: String,
-      snap: Snapshot): Seq[String] = {
-    val fs = fsFor(spark, table)
-    snap.paths.flatMap { p =>
-      val root = new Path(s"$table/$p")
-      if (!fs.exists(root)) Nil
-      else if (fs.getFileStatus(root).isFile) Seq(root.toString)
-      else walkParquet(fs, root)
+  private[graft] def listSnapshotFiles(spark: SparkSession, table: String,
+      snap: Snapshot): Seq[String] =
+    listRoots(spark, snap.paths.map(p => s"$table/$p")).flatMap(_.files)
+
+  /** One listed read root: a plain file (its own single leaf) or a
+    * directory and the parquet files under it. `files` renders a file
+    * root as given and walked files as the filesystem names them. */
+  private final case class Listed(root: Path, isFile: Boolean,
+      leaves: Seq[org.apache.hadoop.fs.FileStatus]) {
+    def files: Seq[String] =
+      if (isFile) Seq(root.toString) else leaves.map(_.getPath.toString)
+  }
+
+  /** The roots that exist, listed in order with one listStatus walk
+    * each — the one driver listing behind [[listSnapshotFiles]],
+    * [[listSnapshotFilesWithLen]] and [[openListed]]. */
+  private def listRoots(spark: SparkSession,
+      roots: Seq[String]): Seq[Listed] = {
+    lazy val fs = fsFor(spark, roots.head)
+    roots.flatMap { r =>
+      val root = new Path(r)
+      if (!fs.exists(root)) None
+      else {
+        val st = fs.getFileStatus(root)
+        Some(if (st.isFile) Listed(root, isFile = true, Seq(st))
+          else Listed(root, isFile = false, walkParquetLeaves(fs, root)))
+      }
     }
   }
 
@@ -3631,19 +3749,22 @@ object Manifest {
     * 0.05 s of raw stats) — a metadata decision must never pay that. */
   private def walkParquet(fs: org.apache.hadoop.fs.FileSystem,
       root: Path): Seq[String] =
-    walkParquetStatus(fs, root).map(_._1)
+    walkParquetLeaves(fs, root).map(_.getPath.toString)
 
   private def walkParquetStatus(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Seq[(String, Long)] = {
-    val out = Seq.newBuilder[(String, Long)]
+      root: Path): Seq[(String, Long)] =
+    walkParquetLeaves(fs, root).map(st => (st.getPath.toString, st.getLen))
+
+  private def walkParquetLeaves(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val out = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
     var stack = List(root)
     while (stack.nonEmpty) {
       val dir = stack.head
       stack = stack.tail
       fs.listStatus(dir).foreach { st =>
         if (st.isDirectory) stack ::= st.getPath
-        else if (st.getPath.getName.endsWith(".parquet"))
-          out += ((st.getPath.toString, st.getLen))
+        else if (st.getPath.getName.endsWith(".parquet")) out += st
       }
     }
     out.result()
@@ -3654,18 +3775,9 @@ object Manifest {
     * partitions (and its reported statistics) from without a second
     * round of per-file RPCs. */
   private[graft] def listSnapshotFilesWithLen(spark: SparkSession,
-      table: String, snap: Snapshot): Seq[(String, Long)] = {
-    val fs = fsFor(spark, table)
-    snap.paths.flatMap { p =>
-      val root = new Path(s"$table/$p")
-      if (!fs.exists(root)) Nil
-      else {
-        val st = fs.getFileStatus(root)
-        if (st.isFile) Seq((root.toString, st.getLen))
-        else walkParquetStatus(fs, root)
-      }
-    }
-  }
+      table: String, snap: Snapshot): Seq[(String, Long)] =
+    listRoots(spark, snap.paths.map(p => s"$table/$p"))
+      .flatMap(l => l.files.zip(l.leaves.map(_.getLen)))
 
   private def normPath(f: String): String = new Path(f).toUri.getPath
 
@@ -3717,10 +3829,13 @@ object Manifest {
     * predicate in full, envelopes prune files, never rows — or None
     * when skipping cannot apply at all (no sidecar of either family,
     * or a hive layout, whose leaf-file reads would drop partition
-    * columns and whose pruning is partition pruning's job). */
+    * columns and whose pruning is partition pruning's job). `listed`
+    * is the caller's own [[listSnapshotFiles]] when it has one, so a
+    * read lists its snapshot once. */
   private[graft] def admittedFilesFor(spark: SparkSession, table: String,
       snap: Snapshot, pred: Column,
-      prunable: String => Boolean = _ => true): Option[Seq[String]] = {
+      prunable: String => Boolean = _ => true,
+      listed: Option[Seq[String]] = None): Option[Seq[String]] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
     import org.apache.spark.sql.types.{DataType, StringType, StructType}
@@ -3738,7 +3853,7 @@ object Manifest {
     // the file universe comes from the FILESYSTEM, not a relation init
     // (as in [[statsAggregateGrouped]]: at 5k files the relation's footer
     // pass costs seconds; the decision must stay a metadata read)
-    val allFiles = listSnapshotFiles(spark, table, snap)
+    val allFiles = listed.getOrElse(listSnapshotFiles(spark, table, snap))
     if (allFiles.exists(f => f.split('/').exists(_.contains("="))))
       return None
     // per-file per-column envelopes keyed by NORMALIZED path (sidecar
@@ -3871,9 +3986,10 @@ object Manifest {
       version: Option[Long] = None,
       prunable: String => Boolean = _ => true): Option[DataFrame] = {
     val snap = resolveSnapshot(spark, table, version, "readPrunedWhere")
-    admittedFilesFor(spark, table, snap, predToPhysical(snap, pred), prunable)
-      .filter(keep => keep.isEmpty ||
-        keep.size < listSnapshotFiles(spark, table, snap).size)
+    val all = listSnapshotFiles(spark, table, snap)
+    admittedFilesFor(spark, table, snap, predToPhysical(snap, pred), prunable,
+        Some(all))
+      .filter(keep => keep.isEmpty || keep.size < all.size)
       .map(keep => serveFiles(spark, table, snap, Some(keep)))
   }
 
@@ -3890,7 +4006,7 @@ object Manifest {
     val all = listSnapshotFiles(spark, table, snap)
     val admitted = pred
       .flatMap(p => admittedFilesFor(spark, table, snap,
-        predToPhysical(snap, p)))
+        predToPhysical(snap, p), listed = Some(all)))
       .getOrElse(all)
     (serveFiles(spark, table, snap,
       Some(admitted).filter(a => a.isEmpty || a.size < all.size)), admitted)

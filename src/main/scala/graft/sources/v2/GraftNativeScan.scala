@@ -265,7 +265,8 @@ private[v2] class GraftNativeScan(path: String, pinned: Option[Long],
 
   override def createReaderFactory(): PartitionReaderFactory =
     GraftNativeScan.readerFactory(spark, snap, required, claimed,
-      tableSchema, partRequired)
+      Manifest.readSchemaAt(spark, snap, filesWithLen.map(_._1))
+        .getOrElse(tableSchema), partRequired)
 }
 
 private[v2] object GraftNativeScan {
@@ -290,10 +291,12 @@ private[v2] object GraftNativeScan {
     * is synthesized per partition from the file's manifest-relative
     * key; claimed filters are re-checked row-level. `outOrdinals`
     * maps each output position to a parquet ordinal (or -1 for the
-    * file-key column). */
+    * file-key column). `readSchema` is the snapshot's read schema
+    * ([[Manifest.readSchemaAt]]; a hive layout's comes from its
+    * relation), partition columns included. */
   def readerFactory(spark: SparkSession, snap: Manifest.Snapshot,
       required: StructType, claimed: Array[Filter],
-      tableSchema: StructType,
+      readSchema: StructType,
       partRequired: StructType = new StructType())
       : PartitionReaderFactory = {
     val metaName = GraftFileMetaColumn.name()
@@ -303,8 +306,7 @@ private[v2] object GraftNativeScan {
     // parquet files do NOT hold partition columns — the data schema
     // and the footer-pushed claims must be partition-free; partition
     // refs in a claim are re-checked row-level over the combined row
-    val dataSchema = StructType(Manifest.committedSchemaOf(snap)
-      .getOrElse(tableSchema).fields
+    val dataSchema = StructType(readSchema.fields
       .filterNot(f => partNames.contains(f.name)))
     val dataClaims = claimed.filter(
       _.references.forall(r => !partNames.contains(r)))

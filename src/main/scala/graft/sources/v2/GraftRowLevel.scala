@@ -80,9 +80,8 @@ private[v2] class GraftRowLevelOperation(val path: String,
         "mapping, then retry (Manifest.deleteWhere/merge also work)")
   }
 
-  private[v2] val tableSchema: StructType =
-    Manifest.committedSchemaOf(snap).getOrElse(
-      Manifest.readVersion(spark, path, snap.version).schema)
+  private[v2] val tableSchema: StructType = Manifest.readSchema(spark, path,
+    snap, Manifest.listSnapshotFiles(spark, path, snap))
 
   /** The group set the write must replace — recorded by the scan at
     * build time; deterministic given (snapshot, pushed predicates). */

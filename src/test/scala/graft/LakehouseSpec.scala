@@ -2627,4 +2627,190 @@ class LakehouseSpec extends AnyFunSuite {
     assert(after.count() == 10002L)
     assert(after.filter(F.col("id") === 1L).head().getLong(1) == 101L)
   }
+
+  /** Stage names of every job `body` starts — the first names the
+    * job's call site, e.g. `parquet at Manifest.scala:NN` for a
+    * schema-inference or listing job launched inside a reader. */
+  private def jobsOf(body: => Any): Seq[String] = {
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        names.synchronized { names += j.stageInfos.map(_.name).mkString("|") }
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    names.synchronized(names.toList)
+  }
+
+  private def inferenceJobs(names: Seq[String]): Seq[String] =
+    names.filter(_.contains("parquet at Manifest.scala"))
+
+  test("manifest reads resolve their schema at the driver: a point read " +
+      "runs one job (two over a delete vector), and no read verb runs a " +
+      "schema-inference job") {
+    import graft.sources.Manifest
+    val dir = java.nio.file.Files.createTempDirectory("manifest_jobs").toString
+    val tbl = s"$dir/t"
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(F.col("id"),
+      (F.col("id") % 7).as("v"), F.concat(F.lit("s"), F.col("id")).as("s"))
+    Manifest.create(spark, tbl, rows(0, 3000).repartitionByRange(3, F.col("id")))
+    Manifest.commitAppend(spark, tbl, rows(3000, 4000).coalesce(1))
+    Manifest.analyzeFiles(spark, tbl, Seq("id", "v"))
+    Manifest.analyzeFilesBloom(spark, tbl, Seq("id"))
+    // the point read serves the bloom's candidate files; the caller
+    // applies its own row filter. The only job is the collect's own.
+    def point1234() = Manifest.readPoint(spark, tbl, "id", 1234L)
+      .filter(F.col("id") === 1234L).collect()
+    point1234() // warm the session once (class loading, codegen caches)
+    var got: Array[org.apache.spark.sql.Row] = null
+    val point = jobsOf { got = point1234() }
+    assert(got.map(_.getLong(0)).toSeq == Seq(1234L))
+    assert(point.size == 1, s"point read jobs: $point")
+
+    Manifest.deleteKeysMoR(spark, tbl, "id", Seq(5L, 3500L))
+    val snap = Manifest.currentSnapshot(spark, tbl).get
+    // unstamped and unpartitioned: the footer half of the rule serves it
+    assert(!snap.meta.contains(Manifest.SchemaKey) &&
+      !Manifest.hiveLayout(spark, tbl, snap))
+    assert(snap.meta.contains("delete_vectors"))
+    // over a delete vector the anti-join adds its own stage job, and
+    // the vector's schema comes from its footer too
+    point1234()
+    val pointDv = jobsOf { got = point1234() }
+    assert(got.map(_.getLong(0)).toSeq == Seq(1234L))
+    assert(pointDv.size == 2 && inferenceJobs(pointDv).isEmpty,
+      s"point read jobs over a delete vector: $pointDv")
+
+    val pred = F.col("id").between(100L, 200L)
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "readPrunedWhereOpt" -> (() => Manifest.readPrunedWhereOpt(spark, tbl,
+        pred).map(_.filter(pred).count())),
+      "statsAggregateWhere" -> (() => Manifest.statsAggregateWhere(spark, tbl,
+        Seq("v"), Seq(("id", 100.0, 2500.0))).collect()),
+      "read" -> (() => Manifest.read(spark, tbl).agg(F.sum("v")).collect()),
+      "readVersion" -> (() => Manifest.readVersion(spark, tbl, snap.version - 1)
+        .agg(F.sum("v")).collect()))
+    verbs.foreach { case (name, run) =>
+      val names = jobsOf(run())
+      assert(inferenceJobs(names).isEmpty, s"$name ran inference jobs: $names")
+    }
+    assert(Manifest.readPrunedWhereOpt(spark, tbl, pred).get
+      .filter(pred).count() == 101L)
+  }
+
+  test("a 40-entry snapshot of `_v` directories reads with no listing " +
+      "or inference job, as the relation Spark would infer") {
+    import graft.sources.Manifest
+    val dir = java.nio.file.Files.createTempDirectory("manifest_40").toString
+    val tbl = s"$dir/t"
+    // 40 entry directories in ONE commit: more read roots than Spark's
+    // parallel-listing threshold (32), every one an underscore name
+    val entries = (0 until 40).map { i =>
+      val rel = s"${Manifest.dataDirName(1L)}-${"%08x".format(i)}"
+      spark.range(i * 10L, i * 10L + 10L).select(F.col("id"),
+        (F.col("id") * 2).as("w")).coalesce(1).write.parquet(s"$tbl/$rel")
+      rel
+    }
+    Manifest.commit(spark, tbl, 0L, entries)
+    val files = Manifest.listSnapshotFiles(spark, tbl,
+      Manifest.currentSnapshot(spark, tbl).get)
+    assert(files.size == 40)
+    Manifest.read(spark, tbl).count()
+    var n = 0L
+    val names = jobsOf { n = Manifest.read(spark, tbl).count() }
+    assert(n == 400L)
+    assert(inferenceJobs(names).isEmpty, s"read ran listing/inference jobs: $names")
+    val inferred = spark.read.parquet(files: _*)
+    assert(Manifest.read(spark, tbl).schema == inferred.schema)
+    assert(Manifest.read(spark, tbl).inputFiles.toSet == inferred.inputFiles.toSet)
+  }
+
+  test("the driver-resolved schema equals Spark's inferred one: Spark-" +
+      "written, foreign (both binaryAsString settings), evolved, mapped " +
+      "and hive snapshots") {
+    import graft.sources.Manifest
+    import org.apache.spark.sql.DataFrame
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted.toSeq
+    def files(tbl: String) = Manifest.listSnapshotFiles(spark, tbl,
+      Manifest.currentSnapshot(spark, tbl).get)
+    def same(what: String, got: DataFrame, inferred: DataFrame): Unit = {
+      assert(got.schema == inferred.schema, s"$what schema")
+      assert(sorted(got) == sorted(inferred), s"$what rows")
+    }
+    val base = java.nio.file.Files.createTempDirectory("manifest_schema").toString
+
+    // 1. Spark-written: non-nullable, nested, decimal, date/timestamp
+    val spk = s"$base/spark"
+    Manifest.create(spark, spk, spark.range(0, 50).select(F.col("id"),
+      F.col("id").cast("int").as("i"), (F.col("id") / 3).as("d"),
+      F.col("id").cast("decimal(12,2)").as("dec"),
+      F.concat(F.lit("k"), F.col("id")).as("s"),
+      F.date_add(F.lit("2024-01-01").cast("date"), F.col("id").cast("int")).as("day"),
+      F.timestamp_seconds(F.col("id")).as("ts"),
+      F.array(F.col("id"), F.lit(null).cast("long")).as("arr"),
+      F.struct(F.col("id").as("a"), F.lit("x").as("b")).as("st"),
+      F.map(F.lit("m"), F.col("id")).as("mp")).repartition(2))
+    same("spark", Manifest.read(spark, spk), spark.read.parquet(files(spk): _*))
+
+    // 2. foreign: parquet-hadoop's example writer stores no Spark
+    // row-metadata key; `raw` is an un-annotated BINARY column
+    val fdir = s"$base/foreign"
+    new java.io.File(fdir).mkdirs()
+    val mt = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary raw; " +
+        "optional binary name (UTF8); optional double x; }")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$fdir/part-0.parquet"))
+      .withType(mt).build()
+    val gf = new org.apache.parquet.example.data.simple.SimpleGroupFactory(mt)
+    try (0 until 20).foreach { i =>
+      val g = gf.newGroup().append("id", i.toLong).append("x", i * 0.5)
+      if (i % 3 != 0) g.append("raw", s"r$i").append("name", s"n$i")
+      w.write(g)
+    } finally w.close()
+    Manifest.adopt(spark, fdir)
+    Seq("false", "true").foreach { b =>
+      spark.conf.set("spark.sql.parquet.binaryAsString", b)
+      try same(s"foreign binaryAsString=$b", Manifest.read(spark, fdir),
+        spark.read.parquet(files(fdir): _*))
+      finally spark.conf.unset("spark.sql.parquet.binaryAsString")
+    }
+    assert(Manifest.read(spark, fdir).schema("raw").dataType ==
+      org.apache.spark.sql.types.BinaryType)
+
+    // 3. evolved: the stamp wins over either footer
+    val evo = s"$base/evolved"
+    Manifest.create(spark, evo, spark.range(0, 10).select(F.col("id")).coalesce(1))
+    Manifest.commitAppend(spark, evo, spark.range(10, 20).select(F.col("id"),
+      (F.col("id") * 2).as("extra")).coalesce(1), mergeSchema = true)
+    assert(Manifest.currentSnapshot(spark, evo).get.meta
+      .contains(Manifest.SchemaKey))
+    same("evolved", Manifest.read(spark, evo),
+      spark.read.option("mergeSchema", "true").parquet(files(evo): _*))
+
+    // 4. column-mapped: physical files, logical names on the frame
+    val mapped = s"$base/mapped"
+    Manifest.create(spark, mapped, spark.range(0, 10).select(F.col("id"),
+      (F.col("id") + 1).as("v")).coalesce(1))
+    Manifest.renameColumn(spark, mapped, "v", "value")
+    same("mapped", Manifest.read(spark, mapped),
+      spark.read.parquet(files(mapped): _*).withColumnRenamed("v", "value"))
+
+    // 5. hive: the relation path keeps the partition columns
+    val hive = s"$base/hive"
+    Manifest.create(spark, hive, spark.range(0, 30).select(F.col("id"),
+      (F.col("id") % 3).as("p")), partitionBy = Seq("p"))
+    val snapH = Manifest.currentSnapshot(spark, hive).get
+    val inferredH = spark.read.parquet(snapH.paths.map(p => s"$hive/$p"): _*)
+    assert(inferredH.columns.contains("p"))
+    same("hive", Manifest.read(spark, hive), inferredH)
+    assert(Manifest.readSchema(spark, hive, snapH, files(hive)) ==
+      inferredH.schema)
+  }
 }
