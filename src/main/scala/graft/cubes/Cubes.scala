@@ -16,7 +16,7 @@ object Tables {
     if (name == "events") events(s, cat) else cat.load(s, name)
 
   def events(s: SparkSession, cat: Catalog): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosAsLong(s)
     normalizeEventTs(cat.load(s, "events"))
   }
 
@@ -28,10 +28,19 @@ object Tables {
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def events(s: SparkSession, d: String): DataFrame = {
-    // legacy conf kept so an older-style TIMESTAMP(NANOS) fixture still
-    // loads (as raw longs) instead of failing the scan outright
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosAsLong(s)
     normalizeEventTs(load(s, d, "events"))
+  }
+
+  /** Legacy conf kept so an older-style TIMESTAMP(NANOS) fixture still
+    * loads (as raw longs) instead of failing the scan outright. The
+    * setting is session-wide: from the first events load on, every
+    * parquet read in the session reads such columns as longs. It is
+    * written only while the session does not already read `true`, so
+    * later loads write no shared state. */
+  private def readNanosAsLong(s: SparkSession): Unit = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    if (s.conf.get(key, "false") != "true") s.conf.set(key, "true")
   }
 
   /** The engine's contract is `ts: TimestampType`. Fixtures have shipped it

@@ -5,8 +5,6 @@ import graft.parse.QueryParser
 import graft.query.CubeQuery
 import graft.respond.Renest
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Execution layer — the cube_field.rb analogue (reference
   * lib/activecube/graphql/cube_field.rb:25-54): database routing (O17),
@@ -44,11 +42,17 @@ object DatabaseRegistry {
 
 /** O19 — execution telemetry (cube_field.rb:51-52 `stats`/`headers`
   * passthrough): wall time, output rows, and the physical plan of the
-  * last run, captured via Spark's QueryExecutionListener. */
+  * run, filled on the calling thread once the rows are in hand.
+  * `durationNs` is the wall time of the collect that produced the rows.
+  * A hit served from a settled [[PlanCache]] entry runs no Spark
+  * execution: its `durationNs` is the cache lookup that served the rows
+  * (on the hit that settles the entry, that lookup holds its one
+  * collect), and its `physicalPlan` is the entry's local relation
+  * (`LocalTableScan`). */
 final class ExecStats {
-  @volatile var durationNs: Long = -1
-  @volatile var rowCount: Long = -1
-  @volatile var physicalPlan: String = ""
+  var durationNs: Long = -1
+  var rowCount: Long = -1
+  var physicalPlan: String = ""
   override def toString: String =
     f"ExecStats(duration=${durationNs / 1e6}%.1f ms, rows=$rowCount)"
 }
@@ -83,7 +87,8 @@ object CubeRunner {
     // memoized per canonical (post-hook) query — response_builder.rb:27-38.
     // A cached entry serves its first run's data: a repeat replays the
     // plan's materialized shuffle output, and once it can read nothing
-    // else the cache settles the entry into its rows (PlanCache).
+    // else the cache settles the entry into its rows (PlanCache), which
+    // later hits return with no Spark execution.
     // EXCEPT metrics that materialize data into the plan (snapshotsData,
     // e.g. semanticSurvivors' centroids trained at compile): caching one
     // would replay a frozen index after the table changed, so those
@@ -105,33 +110,26 @@ object CubeRunner {
         !cube.altSources.exists(_.metricOverrides.get(m.metric).exists(_.snapshotsData)) } &&
       !q.options.contains(graft.query.QueryOpt.StatsOnly) &&
       cube.manifestTable.isEmpty
-    val df = cache match {
+    val stats = new ExecStats // O19
+    val t0 = System.nanoTime()
+    val served = cache match {
       case Some(c) if cacheable =>
-        c.getOrCompile(PlanCache.key(spark, cat.id, cube.name, nested, q, parsed.root))(build)
-      case _ => build
+        c.lookup(PlanCache.key(spark, cat.id, cube.name, nested, q, parsed.root))(build)
+      case _ => PlanCache.Frame(build)
     }
-
-    val stats = new ExecStats
-    val done = new java.util.concurrent.CountDownLatch(1)
-    // the listener is session-wide: it sees every query's callbacks, so
-    // it takes only this request's own collect (`qe eq df.queryExecution`)
-    val listener = new QueryExecutionListener { // O19
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe eq df.queryExecution) {
-          stats.durationNs = durationNs
-          stats.physicalPlan = qe.executedPlan.toString
-          done.countDown()
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        if (qe eq df.queryExecution) done.countDown()
+    val (cols, rows) = served match {
+      case PlanCache.Settled(_, cols, rows, plan) =>
+        stats.durationNs = System.nanoTime() - t0
+        stats.physicalPlan = plan
+        (cols, rows)
+      case PlanCache.Frame(df) =>
+        val t1 = System.nanoTime()
+        val out = Renest.tabular(df) // O20
+        stats.durationNs = System.nanoTime() - t1
+        stats.physicalPlan = df.queryExecution.executedPlan.toString
+        out
     }
-    spark.listenerManager.register(listener)
-    try {
-      val (cols, rows) = Renest.tabular(df) // O20
-      stats.rowCount = rows.size.toLong
-      // the listener fires asynchronously; wait briefly for it
-      done.await(2, java.util.concurrent.TimeUnit.SECONDS)
-      Result(cols, rows, stats)
-    } finally spark.listenerManager.unregister(listener)
+    stats.rowCount = rows.size.toLong
+    Result(cols, rows, stats)
   }
 }

@@ -2,7 +2,7 @@ package graft.exec
 
 import graft.parse.QueryParser.Element
 import graft.query.CubeQuery
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   ExchangeQueryStageExec}
@@ -30,18 +30,23 @@ import scala.util.control.NonFatal
   * plan is an adaptive one whose final plan is fixed (it has run),
   * every leaf of that final plan is a materialized exchange stage or a
   * local table, and every expression in it is deterministic. The hit
-  * collects the frame once and the entry becomes a local relation of
-  * those rows; later hits collect it without a Spark job. A result of
-  * more than 10,000 rows (the row cap), a final stage that scans a
-  * source, or a nondeterministic one is served as before.
+  * collects the frame once, the entry keeps those rows with their
+  * column names and the plan string of a local relation over them, and
+  * the hit returns them; later hits return its rows — no Spark
+  * execution. [[getOrCompile]] serves the same entry as a frame: the
+  * local relation once settled. A result of more than 10,000 rows (the
+  * row cap), a final stage that scans a source, or a nondeterministic
+  * one is served as before.
   *
   * Access-ordered LRU, bounded — janino classes pin metaspace, and a
   * settled entry holds its rows, so the bound matters for a long-lived
   * server.
   */
 final class PlanCache(maxEntries: Int = 128) {
-  /** A cached frame; `claimed` admits one settle attempt, ever. */
-  private final class Entry(@volatile var df: DataFrame) {
+  import PlanCache.{Frame, Served, Settled}
+
+  /** A cached entry; `claimed` admits one settle attempt, ever. */
+  private final class Entry(@volatile var served: Served) {
     val claimed = new AtomicBoolean(false)
   }
   private val map = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true) {
@@ -51,42 +56,58 @@ final class PlanCache(maxEntries: Int = 128) {
   private var _hits = 0L
   private var _misses = 0L
 
-  /** Single-flight: the build runs under the lock, so a concurrent burst
-    * of the same shape compiles ONCE and the rest block briefly then hit.
-    * Serializing first-builds of different shapes is the accepted cost —
-    * a build is tens of ms of Catalyst work, and the entire point of the
-    * cache is that builds are rare. A hit's settle runs outside the
-    * lock; concurrent hits of the entry meanwhile serve its frame. */
-  def getOrCompile(key: String)(build: => DataFrame): DataFrame = {
+  /** The one lookup. Single-flight: the build runs under the lock, so a
+    * concurrent burst of the same shape compiles ONCE and the rest block
+    * briefly then hit. Serializing first-builds of different shapes is
+    * the accepted cost — a build is tens of ms of Catalyst work, and the
+    * entire point of the cache is that builds are rare. A hit's settle
+    * runs outside the lock; concurrent hits of the entry meanwhile serve
+    * its frame. */
+  private[exec] def lookup(key: String)(build: => DataFrame): Served = {
     val (e, hit) = synchronized {
       val cached = map.get(key)
       if (cached != null) { _hits += 1; (cached, true) }
-      else { _misses += 1; val e = new Entry(build); map.put(key, e); (e, false) }
+      else { _misses += 1; val e = new Entry(Frame(build)); map.put(key, e); (e, false) }
     }
-    if (hit) settle(e) else e.df
+    if (hit) settle(e) else e.served
   }
 
-  /** The entry's frame, settled into its rows first when it qualifies.
-    * A settle that throws or finds more than the row cap leaves the
-    * entry as it was, and it is not tried again. */
-  private def settle(e: Entry): DataFrame = {
-    val df = e.df
-    if (!PlanCache.replaysOnlyStages(df) || !e.claimed.compareAndSet(false, true)) df
-    else try {
-      val rows = df.collect()
-      if (rows.length > PlanCache.SettleRowCap) df
-      else {
-        val local = df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
-        e.df = local
-        local
-      }
-    } catch { case NonFatal(_) => df }
+  /** The frame view of [[lookup]]: a settled entry's local relation. */
+  def getOrCompile(key: String)(build: => DataFrame): DataFrame = lookup(key)(build).df
+
+  /** What the entry serves, settled into its rows first when it
+    * qualifies. A settle that throws or finds more than the row cap
+    * leaves the entry as it was, and it is not tried again. */
+  private def settle(e: Entry): Served = e.served match {
+    case f @ Frame(df) if PlanCache.replaysOnlyStages(df) && e.claimed.compareAndSet(false, true) =>
+      try {
+        val rows = df.collect()
+        if (rows.length > PlanCache.SettleRowCap) f
+        else {
+          val seq = rows.toSeq
+          val local = df.sparkSession.createDataFrame(seq.asJava, df.schema)
+          val settled = Settled(local, df.columns.toSeq, seq,
+            local.queryExecution.executedPlan.toString)
+          e.served = settled
+          settled
+        }
+      } catch { case NonFatal(_) => f }
+    case served => served
   }
+
   def hits: Long = synchronized(_hits)
   def misses: Long = synchronized(_misses)
 }
 
 object PlanCache {
+  /** What a lookup serves: a frame to collect, or a settled entry's rows
+    * next to the local relation over them and that relation's physical
+    * plan string. */
+  private[exec] sealed trait Served { def df: DataFrame }
+  private[exec] final case class Frame(df: DataFrame) extends Served
+  private[exec] final case class Settled(df: DataFrame, columns: Seq[String],
+      rows: Seq[Row], plan: String) extends Served
+
   /** Largest result a settled entry holds, in rows. */
   private val SettleRowCap = 10000
 

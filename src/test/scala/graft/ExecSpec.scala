@@ -284,6 +284,104 @@ class ExecSpec extends AnyFunSuite {
     assert(cache.misses == 6 && cache.hits == 16)
   }
 
+  /** SQL executions started while `body` runs, read after the listener
+    * bus drains. */
+  private def sqlExecutions[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            n.incrementAndGet()
+          case _ =>
+        }
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private val flagCounts =
+    """{"fields": [{"name": "returnFlag", "alias": "flag"},
+                   {"name": "count", "alias": "cnt"}],
+        "args": {"options": {"asc": "flag"}}}"""
+  private def flagCountsVia(cache: graft.exec.PlanCache) =
+    CubeRunner.execute(spark, registry, Cubes.lineitemCube, flagCounts, cache = Some(cache))
+
+  test("a settled hit runs no Spark: five hits start 0 SQL executions and " +
+      "return the first run's columns, rows and row schemas") {
+    val cache = new graft.exec.PlanCache()
+    def run() = flagCountsVia(cache)
+    val first = run() // compiles
+    run() // settles
+    val (hits, n) = sqlExecutions((1 to 5).map(_ => run()))
+    assert(n == 0, s"SQL executions over 5 settled hits: $n")
+    assert(first.rows.nonEmpty)
+    hits.foreach { r =>
+      assert(r.columns == first.columns)
+      assert(r.rows == first.rows)
+      assert(r.rows.map(_.schema) == first.rows.map(_.schema))
+      assert(r.stats.rowCount == first.rows.size)
+      assert(r.stats.durationNs > 0)
+      assert(r.stats.physicalPlan.contains("LocalTableScan"), r.stats.physicalPlan)
+    }
+    assert(cache.hits == 6 && cache.misses == 1)
+  }
+
+  test("the hit that settles collects once, and getOrCompile serves the " +
+      "settled local frame") {
+    val cache = new graft.exec.PlanCache()
+    def run() = flagCountsVia(cache)
+    val first = run()
+    val (settling, n) = sqlExecutions(run())
+    assert(n == 1, s"SQL executions on the settling hit: $n")
+    assert(settling.rows == first.rows && settling.columns == first.columns)
+    val cat = registry.catalog(None)
+    val cube = Cubes.lineitemCube(spark, cat)
+    val parsed = graft.parse.QueryParser.parse(cube, flagCounts)
+    val frame = cache.getOrCompile(graft.exec.PlanCache.key(spark, cat.id, cube.name,
+      nested = true, parsed.query, parsed.root))(sys.error("no rebuild"))
+    assert(frame.queryExecution.executedPlan.isInstanceOf[
+      org.apache.spark.sql.execution.LocalTableScanExec])
+    assert(frame.collect().toSeq == first.rows)
+    assert(cache.hits == 2 && cache.misses == 1)
+  }
+
+  test("O19: stats are filled without a listener: a miss and a hit on an " +
+      "entry that never settles time their collect and name their own " +
+      "source; a failing collect rethrows Spark's exception") {
+    import graft.model.Metric
+    import org.apache.spark.sql.functions.{count, lit, raise_error, rand}
+    def withMetric(m: Metric) = (s: SparkSession, cat: graft.sources.Catalog) => {
+      val c = Cubes.lineitemCube(s, cat)
+      c.copy(metrics = c.metrics + (m.name -> m))
+    }
+    // rand() in the final stage: the entry never settles
+    val noisy = withMetric(Metric("noisy", _ => count(lit(1)) + rand()))
+    val ndoc = """{"fields": [{"name": "returnFlag", "alias": "flag"},
+                              {"name": "noisy", "alias": "n"}]}"""
+    val cache = new graft.exec.PlanCache()
+    val runs = (1 to 3).map(_ => CubeRunner.execute(spark, registry, noisy, ndoc,
+      cache = Some(cache)))
+    assert(cache.misses == 1 && cache.hits == 2)
+    runs.foreach { r =>
+      assert(r.rows.nonEmpty && r.stats.rowCount == r.rows.size)
+      assert(r.stats.durationNs > 0)
+      assert(r.stats.physicalPlan.contains("lineitem") &&
+        !r.stats.physicalPlan.contains("LocalTableScan"), r.stats.physicalPlan)
+    }
+    val failing = withMetric(Metric("boom", _ => count(raise_error(lit("boom")))))
+    val e = intercept[Exception](CubeRunner.execute(spark, registry, failing,
+      """{"fields": [{"name": "boom", "alias": "b"}]}"""))
+    assert(e.isInstanceOf[org.apache.spark.SparkThrowable], e)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
+  }
+
   test("O19: stats name the request's own plan while other queries run") {
     @volatile var stop = false
     val noise = new Thread(() => while (!stop) spark.range(1).collect())
@@ -350,7 +448,7 @@ class ExecSpec extends AnyFunSuite {
     val r = CubeRunner.execute(spark, registry, Cubes.lineitemCube, doc)
     assert(r.columns == Seq("cnt") && r.rows.size == 1)
     assert(r.stats.rowCount == 1)
-    assert(r.stats.durationNs > 0, "listener should capture duration")
+    assert(r.stats.durationNs > 0, "the collect's wall time")
     assert(r.stats.physicalPlan.nonEmpty)
   }
 }
