@@ -204,7 +204,7 @@ object Scale {
     // events.ts is parquet TIMESTAMP(NANOS); read it as raw long (same
     // legacy conf Tables.events uses) and WRITE it as plain INT64 nanos
     // so Tables.events' long→timestamp conversion applies unchanged
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.cubes.Tables.readNanosAsLong(spark)
 
     val bigDir = Paths.get(s"$synthRoot/sfbig")
     if (!Files.exists(bigDir.resolve("_READY"))) {

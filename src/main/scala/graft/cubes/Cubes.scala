@@ -38,7 +38,7 @@ object Tables {
     * parquet read in the session reads such columns as longs. It is
     * written only while the session does not already read `true`, so
     * later loads write no shared state. */
-  private def readNanosAsLong(s: SparkSession): Unit = {
+  private[graft] def readNanosAsLong(s: SparkSession): Unit = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     if (s.conf.get(key, "false") != "true") s.conf.set(key, "true")
   }
@@ -74,9 +74,26 @@ object Tables {
 /** Cube declarations over the fixtures (FIXTURES.md "Representative cube
   * declarations"). These are what a user of the engine writes; everything
   * else (joins, source choice, FILTER aggs) is driven from here.
+  *
+  * A declaration over a [[graft.sources.PathCatalog]] is built once per
+  * (session, catalog root, declaration, `spark.sql.session.timeZone`)
+  * and reused ([[graft.sources.ReadCache.memo]], under its immutable-path
+  * contract): a repeated request pays a map lookup, not a rebuild of
+  * every join-spec frame and metric. The zone is in the key because the
+  * events fact's NTZ→TIMESTAMP cast is analysed with the zone in force
+  * when it is built. A JDBC catalog's cube, `eventsCubeOver(df)` and a
+  * supplied `rollup` are built on every call; a manifested fact is the
+  * caller's to re-read per request (`cube.copy(fact = Manifest.read(..))`).
   */
 object Cubes {
   import F.col
+
+  private def memo(s: SparkSession, cat: Catalog, decl: String)(build: => Cube): Cube =
+    cat match {
+      case PathCatalog(root) => graft.sources.ReadCache.memo(s,
+        ("cube", root, decl, s.conf.get("spark.sql.session.timeZone")))(build)
+      case _ => build
+    }
 
   /** LineitemCube — single-source cube plus the full star-join chain
     * lineitem→orders→customer→nation→region for dimension sub-fields
@@ -85,7 +102,7 @@ object Cubes {
   def lineitemCube(s: SparkSession, d: String): Cube =
     lineitemCube(s, PathCatalog(d))
 
-  def lineitemCube(s: SparkSession, cat: Catalog): Cube = {
+  def lineitemCube(s: SparkSession, cat: Catalog): Cube = memo(s, cat, "lineitemCube") {
     val li = Tables.table(s, cat, "lineitem")
     Cube(
       name = "lineitem",
@@ -264,7 +281,7 @@ object Cubes {
   def lineitemCubeWithRollup(s: SparkSession, d: String): Cube =
     lineitemCubeWithRollup(s, PathCatalog(d))
 
-  def lineitemCubeWithRollup(s: SparkSession, cat: Catalog): Cube = {
+  def lineitemCubeWithRollup(s: SparkSession, cat: Catalog): Cube = memo(s, cat, "lineitemCubeWithRollup") {
     val base = lineitemCube(s, cat)
     val rollup = base.fact
       .groupBy(col("l_shipdate"), col("l_returnflag"), col("l_linestatus"))
@@ -294,7 +311,7 @@ object Cubes {
   def ordersCube(s: SparkSession, d: String): Cube =
     ordersCube(s, PathCatalog(d))
 
-  def ordersCube(s: SparkSession, cat: Catalog): Cube = {
+  def ordersCube(s: SparkSession, cat: Catalog): Cube = memo(s, cat, "ordersCube") {
     val o = Tables.table(s, cat, "orders")
     Cube(
       name = "orders",
@@ -343,7 +360,7 @@ object Cubes {
   def salesCube(s: SparkSession, d: String): Cube =
     salesCube(s, PathCatalog(d))
 
-  def salesCube(s: SparkSession, cat: Catalog): Cube = {
+  def salesCube(s: SparkSession, cat: Catalog): Cube = memo(s, cat, "salesCube") {
     val li = Tables.table(s, cat, "lineitem")
     val o = Tables.table(s, cat, "orders")
     Cube(
@@ -383,7 +400,7 @@ object Cubes {
   def documentsCube(s: SparkSession, d: String): Cube =
     documentsCube(s, PathCatalog(d))
 
-  def documentsCube(s: SparkSession, cat: Catalog): Cube = {
+  def documentsCube(s: SparkSession, cat: Catalog): Cube = memo(s, cat, "documentsCube") {
     import graft.llm.TextAnalysis
     val docs = Tables.table(s, cat, "documents")
     Cube(
@@ -542,7 +559,7 @@ object Cubes {
   def audioCube(s: SparkSession, d: String): Cube =
     audioCube(s, PathCatalog(d))
 
-  def audioCube(s: SparkSession, cat: Catalog): Cube = {
+  def audioCube(s: SparkSession, cat: Catalog): Cube = memo(s, cat, "audioCube") {
     import graft.llm.Multimodal
     val feats = Multimodal.extractAudioFeatures(s,
       Multimodal.wavMediaFromDocuments(s, Tables.table(s, cat, "documents"))).toDF()
@@ -572,7 +589,7 @@ object Cubes {
   def videoCube(s: SparkSession, d: String): Cube =
     videoCube(s, PathCatalog(d))
 
-  def videoCube(s: SparkSession, cat: Catalog): Cube = {
+  def videoCube(s: SparkSession, cat: Catalog): Cube = memo(s, cat, "videoCube") {
     import graft.llm.Multimodal
     val frames = Multimodal.frameFeatures(s,
       Multimodal.sampleFrames(s,
@@ -607,7 +624,7 @@ object Cubes {
   def embeddingsCube(s: SparkSession, d: String): Cube =
     embeddingsCube(s, PathCatalog(d))
 
-  def embeddingsCube(s: SparkSession, cat: Catalog): Cube = {
+  def embeddingsCube(s: SparkSession, cat: Catalog): Cube = memo(s, cat, "embeddingsCube") {
     val emb = Tables.table(s, cat, "embeddings")
     Cube(
       name = "embeddings",
@@ -662,7 +679,7 @@ object Cubes {
     eventsCube(s, PathCatalog(d))
 
   def eventsCube(s: SparkSession, cat: Catalog): Cube =
-    eventsCubeOver(Tables.events(s, cat))
+    memo(s, cat, "eventsCube")(eventsCubeOver(Tables.events(s, cat)))
 
   /** The SAME events declaration over a caller-supplied fact — notably a
     * STREAMING DataFrame (`Streaming.eventsStream` + watermark): a
@@ -817,7 +834,7 @@ object Cubes {
   def funnelCube(s: SparkSession, d: String): Cube =
     funnelCube(s, PathCatalog(d))
 
-  def funnelCube(s: SparkSession, cat: Catalog): Cube = {
+  def funnelCube(s: SparkSession, cat: Catalog): Cube = memo(s, cat, "funnelCube") {
     val stages = graft.operators.Funnel.funnelStages(
       Tables.events(s, cat), col("user_id"), col("ts"), col("event_type"),
       Seq("signup", "view", "purchase"), windowMicros = 7L * 86400 * 1000000)
@@ -845,7 +862,8 @@ object Cubes {
     eventsCubeWithSketchRollup(s, PathCatalog(d))
 
   def eventsCubeWithSketchRollup(s: SparkSession, cat: Catalog): Cube =
-    eventsCubeWithSketchRollup(s, cat, rollup = None)
+    memo(s, cat, "eventsCubeWithSketchRollup")(
+      eventsCubeWithSketchRollup(s, cat, rollup = None))
 
   /** `rollup = Some(df)`: serve the daily_sketch source from a
     * MATERIALIZED cell table (e.g. one maintained live by

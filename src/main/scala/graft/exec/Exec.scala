@@ -102,9 +102,11 @@ object CubeRunner {
     // Manifest-backed cubes are the hazard in SOURCE form: compiling
     // resolves the snapshot (and any driver file pruning) to a frozen
     // file list, so a cached plan would keep serving the old version
-    // after a commit — every manifested fact compiles fresh (the
-    // runner rebuilds the cube per execute; only the cache could
-    // replay a stale snapshot).
+    // after a commit — every manifested fact compiles fresh. The base
+    // cube a path-catalog `cubeFor` returns is memoized (Cubes), but a
+    // manifested caller re-reads its fact per request
+    // (`copy(fact = Manifest.read(..))`), so only the cache could
+    // replay a stale snapshot.
     val cacheable = q.measures.forall { case (_, m) =>
       !cube.metrics.get(m.metric).exists(_.snapshotsData) &&
         !cube.altSources.exists(_.metricOverrides.get(m.metric).exists(_.snapshotsData)) } &&
@@ -118,10 +120,10 @@ object CubeRunner {
       case _ => PlanCache.Frame(build)
     }
     val (cols, rows) = served match {
-      case PlanCache.Settled(_, cols, rows, plan) =>
+      case st: PlanCache.Settled =>
         stats.durationNs = System.nanoTime() - t0
-        stats.physicalPlan = plan
-        (cols, rows)
+        stats.physicalPlan = st.plan
+        (st.columns, st.rows)
       case PlanCache.Frame(df) =>
         val t1 = System.nanoTime()
         val out = Renest.tabular(df) // O20

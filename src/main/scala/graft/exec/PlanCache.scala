@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   ExchangeQueryStageExec}
+import org.apache.spark.sql.types.StructType
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -31,10 +32,11 @@ import scala.util.control.NonFatal
   * every leaf of that final plan is a materialized exchange stage or a
   * local table, and every expression in it is deterministic. The hit
   * collects the frame once, the entry keeps those rows with their
-  * column names and the plan string of a local relation over them, and
-  * the hit returns them; later hits return its rows — no Spark
-  * execution. [[getOrCompile]] serves the same entry as a frame: the
-  * local relation once settled. A result of more than 10,000 rows (the
+  * schema and the plan string of a local relation over them, and the
+  * hit returns them; later hits return its rows — no Spark execution.
+  * The entry holds its result once: [[getOrCompile]] serves the same
+  * entry as a frame, and for a settled one builds a local relation over
+  * its rows on each call. A result of more than 10,000 rows (the
   * row cap), a final stage that scans a source, or a nondeterministic
   * one is served as before.
   *
@@ -72,8 +74,12 @@ final class PlanCache(maxEntries: Int = 128) {
     if (hit) settle(e) else e.served
   }
 
-  /** The frame view of [[lookup]]: a settled entry's local relation. */
-  def getOrCompile(key: String)(build: => DataFrame): DataFrame = lookup(key)(build).df
+  /** The frame view of [[lookup]]: a local relation over a settled
+    * entry's rows. */
+  def getOrCompile(key: String)(build: => DataFrame): DataFrame = lookup(key)(build) match {
+    case Frame(df) => df
+    case st: Settled => st.spark.createDataFrame(st.rows.asJava, st.schema)
+  }
 
   /** What the entry serves, settled into its rows first when it
     * qualifies. A settle that throws or finds more than the row cap
@@ -86,7 +92,7 @@ final class PlanCache(maxEntries: Int = 128) {
         else {
           val seq = rows.toSeq
           val local = df.sparkSession.createDataFrame(seq.asJava, df.schema)
-          val settled = Settled(local, df.columns.toSeq, seq,
+          val settled = Settled(df.sparkSession, df.schema, seq,
             local.queryExecution.executedPlan.toString)
           e.served = settled
           settled
@@ -101,12 +107,14 @@ final class PlanCache(maxEntries: Int = 128) {
 
 object PlanCache {
   /** What a lookup serves: a frame to collect, or a settled entry's rows
-    * next to the local relation over them and that relation's physical
-    * plan string. */
-  private[exec] sealed trait Served { def df: DataFrame }
+    * with their schema and the physical plan string of a local relation
+    * over them (computed once, when the entry settles). */
+  private[exec] sealed trait Served
   private[exec] final case class Frame(df: DataFrame) extends Served
-  private[exec] final case class Settled(df: DataFrame, columns: Seq[String],
-      rows: Seq[Row], plan: String) extends Served
+  private[exec] final case class Settled(spark: SparkSession, schema: StructType,
+      rows: Seq[Row], plan: String) extends Served {
+    val columns: Seq[String] = schema.fieldNames.toSeq
+  }
 
   /** Largest result a settled entry holds, in rows. */
   private val SettleRowCap = 10000
@@ -126,8 +134,11 @@ object PlanCache {
       case _ => false
     }
 
-  /** Canonical cache key: session identity + database root + cube +
-    * query data + response shape. Serialized with TYPE TAGS, not
+  /** Canonical cache key: session identity + session time zone +
+    * database root + cube + query data + response shape. The zone is in
+    * it because timestamp literals, casts and `hour`/`date` fields are
+    * evaluated in it: an entry settled under one zone would replay rows
+    * computed in that zone after a switch. Serialized with TYPE TAGS, not
     * structural toString: `Op("flag","eq",Some(25))` and
     * `Op("flag","eq",Some("25"))` render identically under toString but
     * compile to different plans (numeric vs string comparison under
@@ -136,7 +147,8 @@ object PlanCache {
     * are length-prefixed so no value can forge a delimiter. */
   def key(spark: SparkSession, dir: String, cubeName: String, nested: Boolean,
       q: CubeQuery, root: Element): String =
-    canon((System.identityHashCode(spark), dir, cubeName, nested,
+    canon((System.identityHashCode(spark), spark.conf.get("spark.sql.session.timeZone"),
+      dir, cubeName, nested,
       (q.slices, q.measures, q.wheres, q.options, q.grouping), root))
 
   /** Typed canonical form of the query-data value graph (ADTs, tuples,

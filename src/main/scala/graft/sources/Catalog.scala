@@ -13,18 +13,36 @@ sealed trait Catalog {
   def load(spark: SparkSession, table: String): DataFrame
 }
 
-/** Memoized parquet reads: `spark.read.parquet` pays a file listing +
-  * footer/schema read EVERY call, and cube construction eagerly builds
-  * every join-spec table — across a large query registry that is
-  * hundreds of redundant footer reads. DataFrames are immutable plans,
-  * so sharing one per (session, path) is safe for immutable datasets
-  * (the engine's source contract; a mutated path would need
-  * `REFRESH`-style invalidation, like Spark's own table cache). */
+/** Per-session memo of values built from immutable paths. Its two
+  * callers are parquet reads — `spark.read.parquet` pays a file listing
+  * + footer/schema read EVERY call, and cube construction eagerly
+  * builds every join-spec table, so across a large query registry that
+  * is hundreds of redundant footer reads — and the path-catalog cube
+  * declarations in [[graft.cubes.Cubes]]. DataFrames (and cubes over
+  * them) are immutable plans, so sharing one per (session, key) is safe
+  * for immutable datasets (the engine's source contract; a mutated
+  * path would need `REFRESH`-style invalidation, like Spark's own table
+  * cache). Entries are never evicted. */
 object ReadCache {
+  /** One key's value, built by the first caller to force it; concurrent
+    * callers wait for that build. A build that throws leaves it unset. */
+  private final class Cell(build: => AnyRef) { lazy val value: AnyRef = build }
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Any), Cell]()
+
+  /** The value memoized under (`spark`, `key`), built once on first use.
+    * The key must determine the value's type and everything the build
+    * reads. A build may itself call [[memo]] (a cube build reads
+    * parquet), which a nested `computeIfAbsent` on one map forbids; so
+    * the map only stores the key's [[Cell]], and the build runs outside
+    * it when the cell is forced. Concurrent first calls for one key
+    * build once: a cold parquet read launches a schema job, and a
+    * duplicate per racing thread showed as slower warm-up. */
+  def memo[A <: AnyRef](spark: SparkSession, key: Any)(build: => A): A =
+    cache.computeIfAbsent((spark, key), _ => new Cell(build)).value.asInstanceOf[A]
+
   def parquet(spark: SparkSession, path: String): DataFrame =
-    cache.computeIfAbsent((spark, path), k => k._1.read.parquet(k._2))
+    memo(spark, ("parquet", path))(spark.read.parquet(path))
 }
 
 /** A lakehouse root: one parquet dataset per table name. */

@@ -21,7 +21,7 @@ object Streaming {
   /** Streaming read of the events fixture (schema pinned from the batch
     * read — required for file streams). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.cubes.Tables.readNanosAsLong(spark)
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // FileStreamSource takes a directory; glob-filter to the events table
     graft.cubes.Tables.normalizeEventTs(

@@ -444,6 +444,108 @@ class ExecSpec extends AnyFunSuite {
     assert(!(a eq c) && a.count() == c.count()) // region is 5 rows at every SF
   }
 
+  private val tiny = graft.sources.PathCatalog("/root/testdata/sf0.001")
+
+  /** Runs `body` with the session time zone set to `zone`, restoring it. */
+  private def withZone[A](zone: String)(body: => A): A = {
+    val key = "spark.sql.session.timeZone"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, zone)
+    try body finally spark.conf.set(key, old)
+  }
+
+  private val eventsHourly =
+    """{"args": {"ts": {"between": ["2024-01-05 00:00:00", "2024-01-05 06:00:00"]}},
+        "fields": [{"name": "ts", "fields": [{"name": "hour"}]},
+                   {"name": "count", "alias": "cnt"}]}"""
+  private def hourlyVia(cubeFor: (SparkSession, graft.sources.Catalog) => graft.model.Cube,
+      cache: Option[graft.exec.PlanCache]): Seq[String] =
+    CubeRunner.execute(spark, registry, cubeFor, eventsHourly,
+      database = Some("small"), cache = cache).rows.map(_.toString).sorted
+
+  test("plan cache keys carry the session time zone: after a zone switch a " +
+      "cached request returns what an uncached one does") {
+    val cache = new graft.exec.PlanCache()
+    val utc = (1 to 3).map(_ => hourlyVia(Cubes.eventsCube, Some(cache))).last
+    assert(utc.size == 6, utc)
+    withZone("America/Los_Angeles") {
+      val uncached = hourlyVia(Cubes.eventsCube, None)
+      assert(uncached.size == 6 && uncached != utc,
+        s"the zone should move the hours: $uncached")
+      assert(hourlyVia(Cubes.eventsCube, Some(cache)) == uncached)
+    }
+    assert(cache.misses == 2 && cache.hits == 2,
+      s"hits=${cache.hits} misses=${cache.misses}")
+  }
+
+  test("path-catalog cubes are memoized per (session, root, declaration, " +
+      "time zone)") {
+    val path: Seq[(SparkSession, graft.sources.Catalog) => graft.model.Cube] = Seq(
+      Cubes.lineitemCube, Cubes.lineitemCubeWithRollup, Cubes.ordersCube,
+      Cubes.salesCube, Cubes.documentsCube, Cubes.audioCube, Cubes.videoCube,
+      Cubes.embeddingsCube, Cubes.eventsCube, Cubes.funnelCube,
+      Cubes.eventsCubeWithSketchRollup)
+    val built = path.map(_(spark, tiny))
+    path.zip(built).foreach { case (f, c) => assert(f(spark, tiny) eq c, c.name) }
+    assert(built.distinct.size == path.size, "each declaration is its own entry")
+    assert(Cubes.lineitemCube(spark, tiny.root) eq Cubes.lineitemCube(spark, tiny))
+    // another root, another session, another zone: another cube
+    val li = Cubes.lineitemCube(spark, tiny)
+    assert(!(Cubes.lineitemCube(spark, "/root/testdata/sf0.01") eq li))
+    assert(!(Cubes.lineitemCube(spark.newSession(), tiny) eq li))
+    val ev = Cubes.eventsCube(spark, tiny)
+    withZone("America/Los_Angeles") {
+      val la = Cubes.eventsCube(spark, tiny)
+      assert(!(la eq ev) && (Cubes.eventsCube(spark, tiny) eq la))
+    }
+    assert(Cubes.eventsCube(spark, tiny) eq ev)
+  }
+
+  test("after a time-zone switch the memoized events cube answers like one " +
+      "built without the memo") {
+    val unmemoized = (s: SparkSession, cat: graft.sources.Catalog) =>
+      Cubes.eventsCubeOver(graft.cubes.Tables.events(s, cat))
+    val utc = hourlyVia(Cubes.eventsCube, None)
+    assert(utc == hourlyVia(unmemoized, None))
+    withZone("America/Los_Angeles") {
+      val fresh = hourlyVia(unmemoized, None)
+      assert(fresh != utc)
+      assert(hourlyVia(Cubes.eventsCube, None) == fresh)
+    }
+  }
+
+  test("a JDBC catalog's cube is built on every call") {
+    import graft.sources.JdbcCatalog
+    val url = "jdbc:derby:memory:graftmemo;create=true"
+    val driver = "org.apache.derby.jdbc.EmbeddedDriver"
+    graft.cubes.Tables.documents(spark, tiny.root)
+      .write.mode("overwrite").format("jdbc")
+      .option("url", url).option("driver", driver)
+      .option("dbtable", "documents").save()
+    val jdbc = JdbcCatalog(url, Map("driver" -> driver))
+    assert(!(Cubes.documentsCube(spark, jdbc) eq Cubes.documentsCube(spark, jdbc)))
+  }
+
+  test("a manifested fact copied onto the memoized base cube serves a " +
+      "commit made between two requests") {
+    import graft.sources.Manifest
+    val dir = java.nio.file.Files.createTempDirectory("exec_memo_manifest").toString
+    val tbl = s"$dir/lineitem"
+    val li = graft.cubes.Tables.lineitem(spark, tiny.root)
+    Manifest.create(spark, tbl, li.filter("l_returnflag = 'R'"))
+    val cubeFor = (s: SparkSession, cat: graft.sources.Catalog) =>
+      Cubes.lineitemCube(s, cat).copy(fact = Manifest.read(s, tbl), manifestTable = Some(tbl))
+    val cache = new graft.exec.PlanCache()
+    def count() = CubeRunner.execute(spark, registry, cubeFor, doc, cache = Some(cache))
+      .rows.head.getLong(0)
+    val before = count()
+    Manifest.commitAppend(spark, tbl, li.filter("l_returnflag = 'A'"))
+    val after = count()
+    assert(before == li.filter("l_returnflag = 'R'").count())
+    assert(after == li.filter("l_returnflag in ('R', 'A')").count() && after > before)
+    assert(Cubes.lineitemCube(spark, tiny) eq Cubes.lineitemCube(spark, tiny))
+  }
+
   test("O19/O20: execute returns columns+rows and captures stats") {
     val r = CubeRunner.execute(spark, registry, Cubes.lineitemCube, doc)
     assert(r.columns == Seq("cnt") && r.rows.size == 1)
